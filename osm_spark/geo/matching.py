@@ -60,7 +60,7 @@ def viterbi_match(
 
     ``traj``: (vid, step, px, py) with step dense in [0, n_steps);
     ``segs``: (seg_id, ax, ay, bx, by).  ``total_cost`` (identical on
-    every step row of a vehicle) = sum of emission floor(d2) plus L1
+    every step row of a vehicle) = sum of emission floor(sqrt(d2)) plus L1
     transition costs along the optimal path."""
     pts = traj.select(
         (F.col("vid") * n_steps + F.col("step")).alias("pid"),

@@ -46,7 +46,7 @@ def apply_count_delta(
     full-outer on the keys, n' = coalesce(n, 0) + coalesce(d, 0),
     rows reaching zero drop out (a negative result would mean the
     delta and the view disagree about history — surfaced, not
-    clamped, via the ``n > 0`` filter keeping it visible upstream)."""
+    clamped: the ``n != 0`` filter keeps it visible downstream)."""
     merged = counts.join(delta, key_cols, "full_outer").select(
         *key_cols,
         (

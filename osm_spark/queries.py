@@ -44,9 +44,6 @@ def _persist(df: DataFrame) -> DataFrame:
 
 
 def _release_persists() -> None:
-    from osm_spark.temporal import annotate as _ann
-
-    _ann.release_caches()
     while _PERSISTED:
         try:
             _PERSISTED.pop().unpersist(blocking=False)
@@ -643,9 +640,9 @@ def q_pip_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Element histories modeled from events: children = non-purchase events
 # per user (version = rank by ts, visible = not 'error'); parents = the
 # purchase events. All timestamps are post-CommitInfoStart, so this
-# checks the fast path end-to-end THROUGH THE REAL KERNEL (annotate_refs
-# cogroup/applyInPandas); the eps path is pytest-fixture-covered
-# (golden way fixtures + edgecases suite).
+# checks annotate_refs' JVM path for modern refs end-to-end; the eps
+# path and the kernel routing are pytest-fixture-covered (golden way
+# fixtures + edgecases suite).
 
 _ASOF_ORACLE = """
 WITH ev AS (
@@ -736,8 +733,8 @@ def _asof_inputs(spark: SparkSession, sf_dir: str, user_mod: int | None = None):
 
 @register("asof_annotate", _ASOF_ORACLE)
 def q_asof_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The as-of annotation join (annotate.Ways semantics) through the
-    real cogroup kernel: for each parent version pick the child version
+    """The as-of annotation join (annotate.Ways semantics) through
+    annotate_refs: for each parent version pick the child version
     visible at its commit time (kind='set') and emit the minor-version
     updates between parent versions (kind='update')."""
     from osm_spark.temporal.annotate import annotate_refs
@@ -4653,7 +4650,7 @@ _REL_ASOF_ORACLE = _ASOF_ORACLE.replace(
 
 @register("relation_annotate", _REL_ASOF_ORACLE)
 def q_relation_annotate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """annotate.Relations wiring (temporal/relations.py:103-225) —
+    """annotate.Relations wiring (temporal/relations.py annotate_relations) —
     typed children keyed by PACKED FEATURE IDS, member-slot rebuild and
     update-array assembly — driven by the same modeled histories as
     asof_annotate with node-typed members, so the brute-force as-of
@@ -10633,7 +10630,7 @@ def _phrase_sql() -> str:
         parts.append(f"""
     SELECT {pi} AS phrase_id, doc_id,
            CAST(u.i - 1 AS BIGINT) AS pos
-    FROM t, UNNEST(range(1, len(w) - {len(terms) - 1})) AS u(i)
+    FROM t, UNNEST(range(1, len(w) - {len(terms)} + 2)) AS u(i)
     WHERE {conds}""")
     return (
         "WITH t AS (SELECT doc_id, string_split(text, ' ') AS w"

@@ -12,13 +12,14 @@ are into /root/reference):
 - CommitInfoStart      update.go:9-12
 
 Spark shape (SURVEY §3.2): posexplode parent refs, attach next-parent
-metadata with a window ``lead`` over (pid, version), then
-``cogroup(ref).applyInPandas`` — the branchy kernel runs per child ref
-with its full version history and every (parent, slot) referencing it.
-Distribution is by child ref — exactly the reference's ``mapChildLocs``
-inverted index (compute.go:200-218) realized as a shuffle key. Groups
-are tiny (one element's history), so the per-group Python is bounded;
-the heavy lifting (explode, lead, shuffle, reassembly) is all JVM.
+metadata with a window ``lead`` over (pid, version), then join the
+slots with the child versions on ``ref`` once. Distribution is by child
+ref — exactly the reference's ``mapChildLocs`` inverted index
+(compute.go:200-218) realized as a shuffle key. Each ref is routed in
+that one partitioning: modern refs by window aggregates in the JVM, the
+pre-2012 tail by the branchy kernel per ref with its full version
+history and every (parent, slot) referencing it. Groups are tiny (one
+element's history), so the per-group Python is bounded.
 """
 
 from __future__ import annotations
@@ -272,7 +273,7 @@ def _make_kernel(threshold_sec: float, ignore_inconsistency: bool):
         child_pdf = child_pdf.sort_values("version").reset_index(drop=True)
         # eps/threshold never enters the post-CommitInfoStart branches
         # (types.go:101-104), so the fast path is valid for any threshold.
-        if len(child_pdf):
+        if len(child_pdf) and len(refs_pdf):
             sorted_refs = refs_pdf.sort_values(
                 ["pid", "parent_version", "parent_ts", "idx"]
             ).reset_index(drop=True)
@@ -366,145 +367,21 @@ def _make_kernel(threshold_sec: float, ignore_inconsistency: bool):
     return kernel
 
 
-def _fast_sql_path(slots: DataFrame, children: DataFrame) -> DataFrame:
-    """The post-CommitInfoStart path of FindVisible/nextVersionIndex
-    (types.go:101-104, compute.go:145-197) as pure JVM DataFrame ops —
-    the plan SURVEY §2.3 prescribes: equi-join on ref + per-slot ordered
-    reduction. Mirrors ``_fast_path``'s numpy logic expression-for-
-    expression:
-
-    - ``pick``      = argmax vidx with child.committed <= parent.committed
-    - ``start``     = pick+1 if pick visible else #(committed < parent's)
-    - ``nv``        = upper bound from the next parent version
-    - 'set' row     = the pick, when visible
-    - 'update' rows = visible children with vidx in [start, nv)
-
-    Valid only for refs where every relevant commit timestamp is known,
-    >= CommitInfoStart, and nondecreasing in version order — the caller
-    routes all other refs to the branch-exact Python kernel. Assumes
-    ignore_inconsistency (no 'error' rows)."""
-    cis = F.lit(COMMIT_INFO_START.to_pydatetime())
-    w = Window.partitionBy("ref").orderBy("version")
-    has_rev = "reverse" in children.columns
-    ch = children.withColumn("vidx", F.row_number().over(w) - 1)
-    if not has_rev:
-        ch = ch.withColumn("reverse", F.lit(None).cast("boolean"))
-
-    j = slots.join(ch, "ref")
-    C, PC, NC = F.col("committed"), F.col("parent_committed"), F.col("next_committed")
-    crow = F.struct("vidx", "visible", "version", "changeset", "lat", "lon",
-                    "committed")
-    slot_cols = ["pid", "parent_version", "parent_ts", "idx", "ref",
-                 "parent_visible", "parent_committed", "next_ts",
-                 "next_committed"]
-    agg = j.groupBy(*slot_cols).agg(
-        F.max(F.when(C <= PC, crow)).alias("pick"),
-        F.max(F.when(C <= NC, crow)).alias("nxt"),
-        F.sum(F.when(C < PC, 1).otherwise(0)).alias("start_ss"),
-        F.sum(F.when(C < NC, 1).otherwise(0)).alias("vb"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    pick_ok = F.col("pick").isNotNull() & F.col("pick.visible")
-    has_next = F.col("next_ts").isNotNull()
-    n_ok = F.col("nxt").isNotNull() & F.col("nxt.visible")
-    nv_next = F.col("nxt.vidx") + (F.col("nxt.committed") < NC).cast("int")
-    cond_zero = pick_ok & ~(NC > F.col("pick.committed"))
-    nv_nonext = F.when(cond_zero, F.lit(0)).otherwise(F.col("vb"))
-    ann = agg.where("parent_visible").select(
-        "pid", "parent_version", "parent_ts", "idx", "ref",
-        F.col("pick"),
-        pick_ok.alias("pick_ok"),
-        F.when(pick_ok, F.col("pick.vidx") + 1)
-        .otherwise(F.col("start_ss"))
-        .cast("long")
-        .alias("start"),
-        F.when(~has_next, F.col("n"))
-        .otherwise(F.when(n_ok, nv_next).otherwise(nv_nonext))
-        .cast("long")
-        .alias("nv"),
-    )
-    sets = ann.where("pick_ok").select(
-        "pid", "parent_version", "parent_ts", "idx",
-        F.lit("set").alias("kind"),
-        F.col("pick.version").cast("int").alias("child_version"),
-        F.col("pick.changeset").alias("child_changeset"),
-        F.col("pick.lat").alias("lat"),
-        F.col("pick.lon").alias("lon"),
-        F.lit(None).cast("timestamp").alias("uts"),
-        F.lit(None).cast("boolean").alias("reverse"),
-    )
-    upds = (
-        ann.where(F.col("start") < F.col("nv"))
-        .select(
-            "pid", "parent_version", "parent_ts", "idx", "ref",
-            F.explode(F.sequence("start", F.col("nv") - 1)).alias("vidx"),
-        )
-        .join(ch, ["ref", "vidx"])
-        .where("visible")
-        .select(
-            "pid", "parent_version", "parent_ts", "idx",
-            F.lit("update").alias("kind"),
-            F.col("version").cast("int").alias("child_version"),
-            F.col("changeset").alias("child_changeset"),
-            "lat", "lon",
-            # shared/child.go:105-111
-            F.when(F.col("ts") < cis, F.col("ts"))
-            .otherwise(F.col("committed"))
-            .alias("uts"),
-            F.coalesce("reverse", F.lit(False)).alias("reverse"),
-        )
-    )
-    return sets.unionByName(upds)
-
-
-# DataFrames persisted by the most recent annotate_refs() call; see the
-# persist note inside — bounded to one invocation's worth of blocks.
-_PERSISTED: list[DataFrame] = []
+_SLOT_COLS = ["pid", "parent_version", "parent_visible", "parent_changeset",
+              "parent_ts", "parent_committed", "next_ts", "next_committed",
+              "next_changeset", "idx", "ref"]
+_CHILD_COLS = ["version", "visible", "changeset", "ts", "committed", "lat",
+               "lon", "reverse"]
 
 
 def release_caches() -> None:
-    """Unpersist cache blocks held by the last annotate_refs() call."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist(blocking=False)
-        except Exception:
-            pass
+    """No-op: annotation persists nothing (every input is consumed by
+    one keyed pass). Kept so long-lived callers may still call it."""
 
 
-def annotate_refs(
-    parents: DataFrame,
-    children: DataFrame,
-    threshold_sec: float = DEFAULT_THRESHOLD_SEC,
-    ignore_inconsistency: bool = True,
-    child_filter=None,
-) -> DataFrame:
-    """Core as-of annotation (compute.go:38-143).
-
-    parents:  (pid, version, visible, changeset, ts, committed,
-               refs array<struct<ref:long[, annotated:boolean]>> —
-               positional)
-    children: (ref, version, visible, changeset, ts, committed, lat, lon)
-
-    ``child_filter`` (annotate ChildFilter, options.go:58-67): a
-    function Column -> boolean Column over the ref id. Ref slots that
-    are ALREADY annotated (``annotated`` struct field true) and fail
-    the filter are skipped — compute.go:200-218 mapChildLocs semantics:
-    unannotated slots are processed regardless of the filter, so a
-    batch update can restrict work to its own children without losing
-    anyone never annotated before.
-
-    Returns rows (pid, parent_version, idx, kind, child_version,
-    child_changeset, lat, lon, uts) where kind='set' is the major-version
-    assignment (SetChild, way.go:111-120) and kind='update' the minor
-    versions between parent versions.
-
-    Plan: refs whose commit metadata is modern (post-CommitInfoStart,
-    known, monotone) run the pure-JVM join/window plan
-    (:func:`_fast_sql_path`); the rest — the pre-2012 eps-threshold
-    tail, a vanishing fraction at scale — go through the branch-exact
-    cogrouped Python kernel. ``ignore_inconsistency=False`` (error
-    surfacing) forces everything through the kernel.
-    """
+def _slots(parents: DataFrame, child_filter=None) -> DataFrame:
+    """One row per (parent version, ref slot) carrying the next parent
+    version's metadata — the kernel's ``refs_pdf`` (_SLOT_COLS)."""
     w = Window.partitionBy("pid").orderBy("version", "ts")
     p = (
         parents.withColumn("next_ts", F.lead("ts").over(w))
@@ -534,81 +411,201 @@ def annotate_refs(
                 & ~child_filter(F.col("ref"))
             )
         )
-    p = p.drop("_r")
-    kernel = _make_kernel(threshold_sec, ignore_inconsistency)
+    return p.select(*_SLOT_COLS)
 
-    def _cogroup(slots_df, child_df):
+
+def _fast_rows(j: DataFrame) -> DataFrame:
+    """The post-CommitInfoStart path of FindVisible/nextVersionIndex
+    (types.go:101-104, compute.go:145-197) over the joined (slot, child)
+    rows, equal to ``_fast_path``:
+
+    - ``pick`` = last child committed <= the parent's commit (window
+      aggregate per slot); a visible pick is the slot's 'set' row
+    - ``nxt``  = last child committed <= the next parent's commit
+    - 'update' rows = visible children in [start, nv)
+
+    Valid only for refs where every relevant commit timestamp is known,
+    >= CommitInfoStart, and nondecreasing in version order. Then the
+    children committed at or before a time are a prefix of ``vidx``,
+    so ``_fast_path``'s searchsorted bounds are row comparisons:
+    ``start`` is the first child committed after the parent (at it too
+    when the pick is not visible), and ``nv`` the first committed at or
+    after the next parent, or ``nxt`` if that is later and visible.
+    Emits no 'error' rows."""
+    cis = F.lit(COMMIT_INFO_START.to_pydatetime())
+    C, PC, NC = F.col("committed"), F.col("parent_committed"), F.col("next_committed")
+    vidx = F.col("vidx")
+    ws = Window.partitionBy(*_SLOT_COLS)
+    crow = F.struct("vidx", "visible")
+    j = j.select(
+        "*",
+        F.max(F.when(C <= PC, crow)).over(ws).alias("pick"),
+        F.max(F.when(C <= NC, crow)).over(ws).alias("nxt"),
+    )
+    pick_ok = F.col("pick").isNotNull() & F.col("pick.visible")
+    nxt_ok = F.col("nxt").isNotNull() & F.col("nxt.visible")
+    is_set = pick_ok & (vidx == F.col("pick.vidx"))
+    after_start = (C > PC) | (~pick_ok & (C == PC))
+    before_end = (
+        F.col("next_ts").isNull() | (C < NC) | (nxt_ok & (vidx < F.col("nxt.vidx")))
+    )
+    is_upd = F.col("visible") & after_start & before_end
+    return j.where(F.col("parent_visible") & (is_set | is_upd)).select(
+        "pid", "parent_version", "parent_ts", "idx",
+        F.when(is_set, "set").otherwise("update").alias("kind"),
+        F.col("version").cast("int").alias("child_version"),
+        F.col("changeset").alias("child_changeset"),
+        "lat", "lon",
+        # shared/child.go:105-111
+        F.when(is_set, None)
+        .when(F.col("ts") < cis, F.col("ts"))
+        .otherwise(C)
+        .alias("uts"),
+        F.when(~is_set, F.coalesce("reverse", F.lit(False))).alias("reverse"),
+    )
+
+
+def _routed_kernel(kernel):
+    """Adapts the cogroup kernel to one ref's joined (slot, child) rows:
+    the slot x child product is split back into its two sides."""
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        refs = pdf[_SLOT_COLS].drop_duplicates(
+            ["pid", "parent_version", "parent_ts", "idx"]
+        )
+        child = pdf.drop_duplicates("vidx")[["ref"] + _CHILD_COLS]
+        return kernel(refs, child)
+
+    return run
+
+
+def annotate_refs(
+    parents: DataFrame,
+    children: DataFrame,
+    threshold_sec: float = DEFAULT_THRESHOLD_SEC,
+    ignore_inconsistency: bool = True,
+    child_filter=None,
+) -> DataFrame:
+    """Core as-of annotation (compute.go:38-143).
+
+    parents:  (pid, version, visible, changeset, ts, committed,
+               refs array<struct<ref:long[, annotated:boolean]>> —
+               positional)
+    children: (ref, version, visible, changeset, ts, committed, lat,
+               lon[, reverse])
+
+    ``child_filter`` (annotate ChildFilter, options.go:58-67): a
+    function Column -> boolean Column over the ref id. Ref slots that
+    are ALREADY annotated (``annotated`` struct field true) and fail
+    the filter are skipped — compute.go:200-218 mapChildLocs semantics:
+    unannotated slots are processed regardless of the filter, so a
+    batch update can restrict work to its own children without losing
+    anyone never annotated before.
+
+    Returns rows (pid, parent_version, parent_ts, idx, kind,
+    child_version, child_changeset, lat, lon, uts, reverse) where
+    kind='set' is the major-version assignment (SetChild,
+    way.go:111-120) and kind='update' the minor versions between parent
+    versions.
+
+    Plan: one keyed pass. Slots and child versions are joined on
+    ``ref`` once; a window over each ref flags it slow when any of its
+    commit metadata is pre-CommitInfoStart, unknown or non-monotone.
+    Modern refs are answered in the JVM (:func:`_fast_rows`); slow
+    refs — the pre-2012 eps-threshold tail — run the branch-exact
+    Python kernel per ref over the same partitioning, so the plan has
+    one Python node and no extra shuffle. ``ignore_inconsistency=False``
+    (error surfacing) sends everything through the cogrouped kernel.
+    """
+    p = _slots(parents, child_filter)
+    kernel = _make_kernel(threshold_sec, ignore_inconsistency)
+    if not ignore_inconsistency:
         return (
-            slots_df.groupBy("ref")
-            .cogroup(child_df.groupBy("ref"))
+            p.groupBy("ref")
+            .cogroup(children.groupBy("ref"))
             .applyInPandas(kernel, schema=_OUT_SCHEMA)
         )
 
-    if not ignore_inconsistency:
-        return _cogroup(p, children)
-
-    # Both inputs feed four consumers (bad-ref detection, fast path,
-    # slow-path semi joins); without persistence the whole upstream
-    # (scan + explode + lead window) replans per consumer — measured 78
-    # exchanges / ~20 rescans of the source in one query plan. The
-    # persists can't be scoped to this call (the returned plan is lazy),
-    # so each invocation evicts the previous invocation's blocks — a
-    # long-lived session holds at most one annotation's cache; call
-    # release_caches() to drop that too.
-    release_caches()
-    p = p.persist()
-    children = children.persist()
-    _PERSISTED.extend([p, children])
-
+    # a ref is slow exactly when ``_fast_path`` would decline it: a child
+    # or (next) parent commit time unknown or before CommitInfoStart, or
+    # child commit times decreasing in version order
     cis = F.lit(COMMIT_INFO_START.to_pydatetime())
     wc = Window.partitionBy("ref").orderBy("version")
-    bad_child = (
-        children.withColumn("_pc", F.lag("committed").over(wc))
+    C = F.col("committed")
+    if "reverse" not in children.columns:
+        children = children.withColumn("reverse", F.lit(None).cast("boolean"))
+    ch = children.select(
+        "ref", *_CHILD_COLS,
+        (F.row_number().over(wc) - 1).alias("vidx"),
+        (C.isNull() | (C < cis) | F.coalesce(C < F.lag(C).over(wc), F.lit(False)))
+        .alias("_bad"),
+    )
+    PC, NC = F.col("parent_committed"), F.col("next_committed")
+    slot_bad = (
+        PC.isNull() | (PC < cis)
+        | (F.col("next_ts").isNotNull() & (NC.isNull() | (NC < cis)))
+    )
+    j = p.join(ch, "ref").withColumn(
+        "_slow", F.max(F.col("_bad") | slot_bad).over(Window.partitionBy("ref"))
+    )
+    slow = (
+        j.where("_slow")
+        .select(*_SLOT_COLS, *_CHILD_COLS, "vidx")
         .groupBy("ref")
-        .agg(
-            F.max(
-                F.col("committed").isNull()
-                | (F.col("committed") < cis)
-                | (F.col("_pc").isNotNull() & (F.col("committed") < F.col("_pc")))
-            ).alias("bad")
-        )
-        .where("bad")
-        .select("ref")
+        .applyInPandas(_routed_kernel(kernel), schema=_OUT_SCHEMA)
     )
-    bad_parent = (
-        p.groupBy("ref")
-        .agg(
-            F.max(
-                F.col("parent_committed").isNull()
-                | (F.col("parent_committed") < cis)
-                | (
-                    F.col("next_ts").isNotNull()
-                    & (
-                        F.col("next_committed").isNull()
-                        | (F.col("next_committed") < cis)
-                    )
-                )
-            ).alias("bad")
-        )
-        .where("bad")
-        .select("ref")
+    return _fast_rows(j.where(~F.col("_slow"))).unionByName(slow)
+
+
+# the picked child's fields and their value in an unannotated slot
+_UNANNOTATED = {"version": 0, "changeset": 0, "lat": 0.0, "lon": 0.0}
+
+
+def fill_slots(rows: DataFrame, ann: DataFrame, slots: str, make_slot,
+               extra_update_fields=()) -> DataFrame:
+    """Write :func:`annotate_refs` output back onto its parent ``rows``
+    (keyed id, version, ts) in one aggregate and one left join.
+
+    ``rows[slots]`` is rewritten by ``make_slot(elem, picked)``, where
+    ``picked`` is a list of the set child's version, changeset, lat and
+    lon (0 for an unannotated slot); it is NULL for a row without slots.
+    ``updates`` becomes the array of update structs with fields idx,
+    version, ts, changeset, lat, lon plus ``extra_update_fields``, in
+    (idx, version) order (update.go:63-85 SortByIndex); it is NULL, not
+    empty, for a row without updates. Rows duplicating an (id, version,
+    ts) key each get the annotation of one such row."""
+    kind = F.col("kind")
+    upd = {"idx": "idx", "version": "child_version", "ts": "uts",
+           "changeset": "child_changeset", "lat": "lat", "lon": "lon",
+           **{f: f for f in extra_update_fields}}
+    per = ann.groupBy(
+        F.col("pid").alias("id"),
+        F.col("parent_version").alias("version"),
+        F.col("parent_ts").alias("ts"),
+    ).agg(
+        F.map_from_entries(F.collect_set(F.when(kind == "set", F.struct(
+            "idx", F.struct(*[F.col(upd[f]).alias(f) for f in _UNANNOTATED])
+        )))).alias("_sets"),
+        # field order = sort key: (idx, version) — SortByIndex is stable
+        # and generation order per slot is ascending version index
+        F.array_sort(F.collect_set(F.when(kind == "update", F.struct(
+            *[F.col(c).alias(f) for f, c in upd.items()]
+        )))).alias("_upds"),
     )
-    slow_refs = bad_child.unionByName(bad_parent).distinct()
-    if slow_refs.isEmpty():
-        # common modern case: no eps-threshold tail at all — skip the
-        # anti/semi joins and the Python-kernel branch entirely (the
-        # isEmpty() materializes the persisted inputs the main query
-        # needs anyway, so the extra action is nearly free)
-        return _fast_sql_path(p, children)
-    fast = _fast_sql_path(
-        p.join(slow_refs, "ref", "left_anti"),
-        children.join(slow_refs, "ref", "left_anti"),
+    keys = ["id", "version", "ts"]
+    rest = [c for c in rows.columns if c not in keys and c != slots]
+
+    def fill(elem, i):
+        s = F.col("_sets")[i]
+        return make_slot(elem, [
+            F.coalesce(s[f], F.lit(z)).alias(f) for f, z in _UNANNOTATED.items()
+        ])
+
+    return rows.join(per, keys, "left").select(
+        *keys, *rest,
+        F.when(F.size(slots) > 0, F.transform(slots, fill)).alias(slots),
+        F.when(F.size("_upds") > 0, F.col("_upds")).alias("updates"),
     )
-    slow = _cogroup(
-        p.join(slow_refs, "ref", "left_semi"),
-        children.join(slow_refs, "ref", "left_semi"),
-    )
-    return fast.unionByName(slow)
 
 
 def annotate_ways(
@@ -628,7 +625,7 @@ def annotate_ways(
 
     Returns the ways DataFrame with ``nodes`` rewritten as
     array<struct<ref, version, changeset, lat, lon>> and ``updates`` as
-    array<struct<idx, version, changeset, ts, lat, lon>>, both in slot /
+    array<struct<idx, version, ts, changeset, lat, lon>>, both in slot /
     (index, ts) order (update.go:63-85 SortByIndex).
     """
     parents = ways.select(
@@ -645,73 +642,7 @@ def annotate_ways(
         "committed", "lat", "lon",
     )
     ann = annotate_refs(parents, children, threshold_sec, ignore_inconsistency)
-
-    sets = ann.filter(F.col("kind") == "set").select(
-        "pid", "parent_version", "parent_ts", "idx", "child_version",
-        "child_changeset", "lat", "lon",
+    return fill_slots(
+        ways, ann, "nodes",
+        lambda n, picked: F.struct(n["ref"].alias("ref"), *picked),
     )
-    upds = (
-        ann.filter(F.col("kind") == "update")
-        .groupBy("pid", "parent_version", "parent_ts")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    # field order = sort key: (idx, version) — SortByIndex
-                    # (update.go:63-74) is stable, and generation order per
-                    # slot is ascending version index.
-                    F.struct(
-                        F.col("idx").alias("idx"),
-                        F.col("child_version").alias("version"),
-                        F.col("uts").alias("ts"),
-                        F.col("child_changeset").alias("changeset"),
-                        F.col("lat").alias("lat"),
-                        F.col("lon").alias("lon"),
-                    )
-                )
-            ).alias("updates")
-        )
-    )
-
-    slots = ways.select(
-        F.col("id").alias("pid"),
-        F.col("version").alias("parent_version"),
-        F.col("ts").alias("parent_ts"),
-        F.posexplode("nodes").alias("idx", "node"),
-    )
-    filled = (
-        slots.join(sets, ["pid", "parent_version", "parent_ts", "idx"], "left")
-        .select(
-            "pid",
-            "parent_version",
-            "parent_ts",
-            "idx",
-            F.struct(
-                F.col("node.ref").alias("ref"),
-                F.coalesce("child_version", F.lit(0)).alias("version"),
-                F.coalesce("child_changeset", F.lit(0)).alias("changeset"),
-                F.coalesce("lat", F.lit(0.0)).alias("lat"),
-                F.coalesce("lon", F.lit(0.0)).alias("lon"),
-            ).alias("node"),
-        )
-        .groupBy("pid", "parent_version", "parent_ts")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("idx", "node"))).alias("_slots")
-        )
-        .select(
-            "pid",
-            "parent_version",
-            "parent_ts",
-            F.transform("_slots", lambda s: s["node"]).alias("nodes"),
-        )
-    )
-    ren = lambda df: (
-        df.withColumnRenamed("pid", "id")
-        .withColumnRenamed("parent_version", "version")
-        .withColumnRenamed("parent_ts", "ts")
-    )
-    out = (
-        ways.drop("nodes")
-        .join(ren(filled), ["id", "version", "ts"], "left")
-        .join(ren(upds), ["id", "version", "ts"], "left")
-    )
-    return out

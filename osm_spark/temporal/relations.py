@@ -26,7 +26,7 @@ from pyspark.sql.types import (
 
 from osm_spark.core import ids
 from osm_spark.geom import assembly as A
-from osm_spark.temporal.annotate import COMMIT_INFO_START, annotate_refs
+from osm_spark.temporal.annotate import annotate_refs, fill_slots
 
 
 def _signed_area(pts: list[tuple[float, float]]) -> float:
@@ -160,68 +160,13 @@ def annotate_relations(
         ).alias("refs"),
     )
     ann = annotate_refs(parents, children, threshold_sec, ignore_inconsistency)
-
-    sets = ann.filter(F.col("kind") == "set").select(
-        "pid", "parent_version", "parent_ts", "idx",
-        "child_version", "child_changeset", "lat", "lon",
-    )
-    upds = (
-        ann.filter(F.col("kind") == "update")
-        .groupBy("pid", "parent_version", "parent_ts")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("idx").alias("idx"),
-                        F.col("child_version").alias("version"),
-                        F.col("uts").alias("ts"),
-                        F.col("child_changeset").alias("changeset"),
-                        F.col("lat").alias("lat"),
-                        F.col("lon").alias("lon"),
-                        F.col("reverse").alias("reverse"),
-                    )
-                )
-            ).alias("updates")
-        )
-    )
-
-    slots = relations.select(
-        F.col("id").alias("pid"),
-        F.col("version").alias("parent_version"),
-        F.col("ts").alias("parent_ts"),
-        F.posexplode("members").alias("idx", "m"),
-    )
-    filled = (
-        slots.join(sets, ["pid", "parent_version", "parent_ts", "idx"], "left")
-        .select(
-            "pid", "parent_version", "parent_ts", "idx",
-            F.struct(
-                F.col("m.type").alias("type"),
-                F.col("m.ref").alias("ref"),
-                F.col("m.role").alias("role"),
-                F.coalesce("child_version", F.lit(0)).alias("version"),
-                F.coalesce("child_changeset", F.lit(0)).alias("changeset"),
-                F.coalesce("lat", F.lit(0.0)).alias("lat"),
-                F.coalesce("lon", F.lit(0.0)).alias("lon"),
-                F.lit(0).alias("orientation"),
-            ).alias("m"),
-        )
-        .groupBy("pid", "parent_version", "parent_ts")
-        .agg(F.array_sort(F.collect_list(F.struct("idx", "m"))).alias("_s"))
-        .select(
-            "pid", "parent_version", "parent_ts",
-            F.transform("_s", lambda s: s["m"]).alias("members"),
-        )
-    )
-    ren = lambda df: (
-        df.withColumnRenamed("pid", "id")
-        .withColumnRenamed("parent_version", "version")
-        .withColumnRenamed("parent_ts", "ts")
-    )
-    return (
-        relations.drop("members")
-        .join(ren(filled), ["id", "version", "ts"], "left")
-        .join(ren(upds), ["id", "version", "ts"], "left")
+    return fill_slots(
+        relations, ann, "members",
+        lambda m, picked: F.struct(
+            m["type"].alias("type"), m["ref"].alias("ref"),
+            m["role"].alias("role"), *picked, F.lit(0).alias("orientation"),
+        ),
+        extra_update_fields=["reverse"],
     )
 
 

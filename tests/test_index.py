@@ -130,3 +130,20 @@ def test_phrase_match_positions_and_adjacency(spark):
         for r in phrase_match(post, "b c").collect()
     }
     assert got2 == {(1, 1), (1, 4), (2, 3)}
+
+
+def test_phrase_oracle_finds_phrase_ending_document():
+    """The phrase_search oracle's window over token positions must reach
+    the last full window: a phrase that ends the text is an occurrence."""
+    import duckdb
+
+    from osm_spark.queries import _phrase_sql
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.execute(
+        "INSERT INTO documents VALUES "
+        "(1, 'alpha slow hash batch'), (2, 'slow hash batch omega')"
+    )
+    got = sorted(con.execute(_phrase_sql()).fetchall())
+    assert got == [(0, 1, 1), (0, 2, 0)]

@@ -395,3 +395,62 @@ def test_round5_session4_late_plan_shapes(spark):
     mg = _plan(spark, "media_gif")
     assert 1 <= _count(mg, "ArrowEvalPython") <= 2
     assert "BatchEvalPython" not in mg
+
+
+_PY_NODE = r"\b\w*(?:InPandas|InArrow|EvalPython)\b"
+
+
+def _final_plan(df) -> str:
+    """Run ``df`` once and return its AQE final plan (without the
+    initial plan AQE prints after it)."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    return qe.executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def _operators(plan: str, node: str) -> int:
+    """Operator lines starting with ``node`` — not the target a
+    ReusedExchange line names."""
+    return len(re.findall(rf"^[\s:|+-]*{node}", plan, re.M))
+
+
+def test_annotate_ways_single_keyed_pass(spark):
+    """annotate_ways plans its as-of pass once: building the DataFrame
+    runs no job, and the executed plan holds one Python node, no cache
+    scan and at most 6 hash shuffles (the persisted multi-consumer plan
+    had 31)."""
+    from osm_spark.temporal.annotate import annotate_ways
+    from tests.test_annotate_edgecases import mixed_fixture
+
+    wdf, ndf = mixed_fixture(spark)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(None))
+    df = annotate_ways(wdf, ndf)
+    assert set(tracker.getJobIdsForGroup(None)) == jobs
+    plan = _final_plan(df)
+    assert _operators(plan, "Exchange hashpartitioning") <= 6, plan
+    assert len(re.findall(_PY_NODE, plan)) == 1, plan
+    assert "InMemoryTableScan" not in plan
+
+
+def test_annotate_relations_runs_kernel_once(spark):
+    """Members and updates come from one aggregate over the annotation
+    rows, so the cogroup kernel is planned once."""
+    from pyspark.sql import functions as F
+
+    from osm_spark.temporal.annotate import annotate_ways
+    from osm_spark.temporal.relations import annotate_relations
+    from tests.test_annotate_edgecases import mixed_fixture
+
+    wdf, ndf = mixed_fixture(spark)
+    rels = wdf.select(
+        "id", "version", "visible", "changeset", "ts", "committed",
+        F.lit(None).cast("map<string,string>").alias("tags"),
+        F.transform("nodes", lambda n: F.struct(
+            F.lit("node").alias("type"), n["ref"].alias("ref"),
+            F.lit("").alias("role"),
+        )).alias("members"),
+    )
+    df = annotate_relations(rels, ndf, annotate_ways(wdf, ndf))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert _count(plan, "FlatMapCoGroupsInPandas") == 1, plan
