@@ -40,13 +40,6 @@ from osm_spark.geo import distance, tiles
 EARTH_R_M = 6_371_000.0  # matches geo/distance.py haversine radius
 
 
-def cell_id(lat, lon, zoom: int):
-    """Cell key column: packed tile key at ``zoom`` (tile_key layout)."""
-    return tiles.tile_key(
-        F.lit(zoom), tiles.tile_x(lon, zoom), tiles.tile_y(lat, zoom)
-    )
-
-
 def k_ring_cells(x: int, y: int, zoom: int, r: int) -> list[tuple[int, int]]:
     """Square k-ring of tile (x, y): all tiles with chebyshev distance
     <= r, clamped to the zoom's valid range (x wraps, y clamps)."""

@@ -14,15 +14,16 @@ prefixes).
 
 Scale shape — NO iterative rescans of the point set:
 
-- ONE point-level aggregation at z_max builds the finest counts;
-  every coarser level is a parent-sum roll-up of the level below
-  (cell-sized frames, 4-to-1 shrink per level — the tile_pyramid
-  kernel).
-- The split/leaf decision walks DOWN through cell-sized joins: a
-  level-z cell is ELIGIBLE iff its parent split (eligible AND over
-  cap); eligible cells at or under cap — or at z_max — are leaves.
-  Every join is cell-keyed and map-side-combinable; points are never
-  touched again.
+- The counts of every level come from ONE pyramid aggregate
+  (``tiles.pyramid_counts``, the tile_pyramid kernel): the points are
+  aggregated once at z_max, and every coarser level is one explode of
+  each z_max cell's ancestor keys and one sum — two shuffles, however
+  many levels.
+- The split/leaf decision is one cell-keyed join, not a walk down the
+  levels.  A level-z cell is ELIGIBLE iff all its ancestors down to
+  z_min exceeded cap; counts never shrink going up, so that is iff
+  z == z_min or its parent exceeded cap.  Eligible cells at or under
+  cap — or at z_max — are leaves.  Points are never touched again.
 - Leaf-set invariant (pytest + oracle-pinned): leaves tile the
   occupied space exactly — every point lies in exactly one leaf, so
   sum(leaf n) == |points|.
@@ -32,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.geo import tiles
 
 
 def adaptive_bins(
@@ -48,41 +51,21 @@ def adaptive_bins(
     occupied cell whose ancestors (down to z_min) all exceeded
     ``cap`` and which itself is at or under cap — or at z_max, where
     recursion stops regardless."""
-    counts = {
-        z_max: pts.groupBy(
-            F.col(x_col).alias("x"), F.col(y_col).alias("y")
-        ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    }
-    for z in range(z_max - 1, z_min - 1, -1):
-        counts[z] = (
-            counts[z + 1]
-            .groupBy(
-                F.shiftright("x", 1).alias("x"),
-                F.shiftright("y", 1).alias("y"),
-            )
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-
-    leaves = None
-    elig = counts[z_min]
-    for z in range(z_min, z_max + 1):
-        is_leaf = (F.col("n") <= cap) | F.lit(z == z_max)
-        leaf_z = elig.where(is_leaf).select(
-            F.lit(z).cast("long").alias("z"), "x", "y", "n"
-        )
-        leaves = leaf_z if leaves is None else leaves.unionByName(leaf_z)
-        if z < z_max:
-            split = elig.where(F.col("n") > cap).select(
-                F.col("x").alias("px"), F.col("y").alias("py")
-            )
-            nxt = counts[z + 1]
-            elig = nxt.join(
-                split,
-                (F.shiftright(nxt["x"], 1) == F.col("px"))
-                & (F.shiftright(nxt["y"], 1) == F.col("py")),
-                "semi",
-            )
-    return leaves
+    cells = tiles.pyramid_counts(pts, z_max, z_min, x_col, y_col).select(
+        "key", "n", tiles.key_zoom("key").alias("z")
+    )
+    z, x, y = F.col("z"), tiles.key_x("key"), tiles.key_y("key")
+    parent = F.when(
+        z > z_min,
+        tiles.tile_key(F.shiftright(x, 1), F.shiftright(y, 1), z - 1),
+    )
+    split = cells.where(F.col("n") > cap).select(F.col("key").alias("pkey"))
+    return (
+        cells.where((F.col("n") <= cap) | (z == z_max))
+        .join(split, parent == F.col("pkey"), "left")
+        .where((z == z_min) | F.col("pkey").isNotNull())
+        .select(z.cast("long").alias("z"), x.alias("x"), y.alias("y"), "n")
+    )
 
 
 def adaptive_bins_sql(

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 PI = math.pi
@@ -184,6 +184,61 @@ def tile_key(x, y, z) -> Column:
         .bitwiseOR(F.shiftleft(_col(x).cast("long"), 29))
         .bitwiseOR(_col(y).cast("long"))
     )
+
+
+KEY_MAX_ZOOM = 28  # tile_key's x/y fields are 29 bits wide
+_KEY_FIELD = (1 << 29) - 1
+
+
+def key_zoom(key) -> Column:
+    return F.shiftright(_col(key), 58).cast("int")
+
+
+def key_x(key) -> Column:
+    return F.shiftright(_col(key), 29).bitwiseAND(F.lit(_KEY_FIELD))
+
+
+def key_y(key) -> Column:
+    return _col(key).bitwiseAND(F.lit(_KEY_FIELD))
+
+
+def check_pyramid_zooms(z_max: int, z_min: int) -> None:
+    if not 0 <= z_min <= z_max <= KEY_MAX_ZOOM:
+        raise ValueError(
+            f"need 0 <= z_min <= z_max <= {KEY_MAX_ZOOM}, "
+            f"got z_min={z_min}, z_max={z_max}"
+        )
+
+
+def pyramid_counts(pts: DataFrame, z_max: int, z_min: int, x: str = "x",
+                   y: str = "y", n: str = "n") -> DataFrame:
+    """Occupied-tile counts at every zoom z_min..z_max as (key, n) rows,
+    ``key`` in the tile_key layout; ``pts`` has one row per point with
+    its z_max tile coords in columns ``x`` and ``y``.
+
+    Two shuffles whatever the number of levels: one aggregate of the
+    points on the packed z_max key, then one explode of each base
+    tile's z_max-1..z_min ancestor keys (shift math) and one aggregate
+    of those, unioned with the base.  Points are scanned once and only
+    the per-tile table is exploded, never points x zooms.  Raises
+    ``ValueError`` unless 0 <= z_min <= z_max <= KEY_MAX_ZOOM."""
+    check_pyramid_zooms(z_max, z_min)
+    base = pts.groupBy(tile_key(x, y, F.lit(z_max)).alias("key")).agg(
+        F.count(F.lit(1)).alias(n)
+    )
+    if z_min == z_max:
+        return base
+    bx, by = key_x("key"), key_y("key")
+    ancestors = F.array(*[
+        tile_key(F.shiftright(bx, z_max - z), F.shiftright(by, z_max - z), F.lit(z))
+        for z in range(z_max - 1, z_min - 1, -1)
+    ])
+    up = (
+        base.select(F.explode(ancestors).alias("key"), n)
+        .groupBy("key")
+        .agg(F.sum(n).alias(n))
+    )
+    return base.unionByName(up)
 
 
 # ================================================================ SQL twins

@@ -113,30 +113,26 @@ def tile_pyramid_counts(
 ) -> DataFrame:
     """Counts per tile for every zoom z_min..z_max.
 
-    Strategy for scale: compute the z_max assignment ONCE (one narrow
-    pass over pages + one shuffle), then roll up parents zoom-by-zoom
-    with shift math on the already-tiny per-tile table — never re-scans
-    pages per zoom, never explodes pages x zooms.
+    Strategy for scale: two shuffles, however many zooms are asked for
+    (``tiles.pyramid_counts``).  Pages are scanned once and aggregated
+    on one packed long key at z_max; each base tile then emits its
+    ancestor keys (parent shift math) in one explode over the per-tile
+    table — never pages x zooms — and one aggregate sums them.  x, y
+    and zoom are unpacked once at the end.  Raises ``ValueError``
+    unless 0 <= z_min <= z_max <= 28 (the key's field width).
     """
-    base = tile_counts(spark, sf_dir, z_max)
-    levels = [base]
-    cur = base
-    for z in range(z_max - 1, z_min - 1, -1):
-        cur = (
-            cur.select(
-                tiles.parent_x("tile_x").alias("tile_x"),
-                tiles.parent_y("tile_y").alias("tile_y"),
-                "n_pages",
-            )
-            .groupBy("tile_x", "tile_y")
-            .agg(F.sum("n_pages").alias("n_pages"))
-            .withColumn("zoom", F.lit(z))
-        )
-        levels.append(cur)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    tiles.check_pyramid_zooms(z_max, z_min)
+    pts = page_points(spark, sf_dir).select(
+        tiles.tile_x("lon", z_max).alias("x"),
+        tiles.tile_y("lat", z_max).alias("y"),
+    )
+    pyr = tiles.pyramid_counts(pts, z_max, z_min, n="n_pages")
+    return pyr.select(
+        tiles.key_x("key").alias("tile_x"),
+        tiles.key_y("key").alias("tile_y"),
+        "n_pages",
+        tiles.key_zoom("key").alias("zoom"),
+    )
 
 
 def captures(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -129,7 +129,8 @@ def _pyramid_oracle(z_max: int, z_min: int) -> str:
 @register("tile_pyramid", _pyramid_oracle(10, 4))
 def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zoom pyramid z4..z10 via parent-shift rollup (tile.Range math);
-    pages are scanned once, rollups run on the per-tile table only."""
+    pages are scanned once, and the roll-up explodes the per-tile table
+    into ancestor keys and aggregates them once (two shuffles)."""
     df = pages.tile_pyramid_counts(spark, sf_dir, z_max=10, z_min=4)
     return df.select(
         "tile_x", "tile_y", F.col("n_pages").cast("long").alias("n_pages"), "zoom"
@@ -10767,10 +10768,10 @@ def q_quadtree_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     over 10 pages recurse toward z6, so the hot-city cell splits all
     the way down while ocean stays coarse — the equi-depth leaf
     layout a skew-aware partitioner wants (each leaf ~<= cap rows, no
-    10^9-row hot tile next to empty neighbors).  ONE point-level
-    aggregation at z_max; every coarser count is a 4-to-1 parent-sum
-    roll-up and every split/leaf decision a cell-sized semi-join —
-    points are never rescanned.  Leaves tile occupied space exactly:
+    10^9-row hot tile next to empty neighbors).  Every level's counts
+    come from one pyramid aggregate (two shuffles for any depth) and
+    the split/leaf decision is one cell-keyed parent join — points are
+    never rescanned.  Leaves tile occupied space exactly:
     sum(n) over leaves equals the corpus count (pytest-pinned
     conservation); the oracle replays counts, eligibility chain and
     leaf predicate per level."""

@@ -22,11 +22,16 @@ is the q-gram prefix-filtered join (AllPairs/PPJoin family):
 3. Candidates verify with the exact unit-cost Levenshtein DP
    (`F.levenshtein`, JVM-side; DuckDB's levenshtein() is the same
    classic DP, so the oracle can brute-force all pairs index-free).
+4. Step 1 needs |A| - d*q >= 1 for one of the two strings.  When both
+   have at most d*q distinct grams they may share none ('ab' vs 'cd'
+   at q=2, d=2), so those SHORT strings join each other on a length
+   band (|len_a - len_b| <= d) instead, and are verified the same way.
 
 Cost: one gram-frequency aggregation (gram-vocabulary-sized,
 broadcast), one per-string rank window, one equi-join on prefix
-grams, one verify projection.  No similarity join in the plan ever
-compares strings that share zero rare grams.
+grams, one length-band join over the short strings only, one verify
+projection.  Apart from short-string pairs, no similarity join in the
+plan ever compares strings that share zero rare grams.
 """
 
 from __future__ import annotations
@@ -56,14 +61,20 @@ def edit_distance_join(
     q: int = 2,
 ) -> DataFrame:
     """-> (a, b, dist): all id pairs (a < b) with
-    levenshtein(s_a, s_b) <= d.  Exact recall via the prefix filter
-    (module header); requires length >= q * (d + 1) for the >= 1
-    shared-prefix-gram guarantee — shorter strings join on their full
-    gram set (prefix length covers it)."""
+    levenshtein(s_a, s_b) <= d.
+
+    Exact recall via the prefix filter (module header) whenever one of
+    the two strings has more than d*q distinct grams.  Two SHORT
+    strings (<= d*q distinct grams each, e.g. anything shorter than
+    q*(d+1)) may share no gram at all ('ab' vs 'cd', q=2, d=2), so
+    short strings also pair with every short string within d of their
+    length — a length-banded join, each pair emitted once — and those
+    pairs skip the prefix join."""
     base = strs.select(
-        F.col(id_col).alias("sid"), F.col(str_col).alias("s")
-    )
-    g = base.select("sid", "s", F.explode(qgrams("s", q)).alias("g"))
+        F.col(id_col).alias("sid"), F.col(str_col).alias("s"),
+        qgrams(str_col, q).alias("grams"),
+    ).withColumn("short", F.size("grams") <= d * q)
+    g = base.select("sid", "s", "short", F.explode("grams").alias("g"))
     freq = g.groupBy("g").agg(F.count(F.lit(1)).alias("gf"))
     ranked = (
         g.join(F.broadcast(freq), "g")
@@ -74,21 +85,41 @@ def edit_distance_join(
             ),
         )
         .where(F.col("rk") <= d * q + 1)
-        .select("sid", "s", "g")
+        .select("sid", "s", "short", "g")
     )
     a = ranked.select(
-        F.col("sid").alias("a"), F.col("s").alias("sa"), "g"
+        F.col("sid").alias("a"), F.col("s").alias("sa"),
+        F.col("short").alias("short_a"), "g",
     )
     b = ranked.select(
-        F.col("sid").alias("b"), F.col("s").alias("sb"), "g"
+        F.col("sid").alias("b"), F.col("s").alias("sb"),
+        F.col("short").alias("short_b"), "g",
     )
     cand = (
         a.join(b, "g")
-        .where(F.col("a") < F.col("b"))
+        .where((F.col("a") < F.col("b")) & ~(F.col("short_a") & F.col("short_b")))
         .select("a", "b", "sa", "sb")
         .distinct()
     )
-    return cand.select(
+    short = base.where("short").select("sid", "s", F.length("s").alias("len"))
+    lo = short.select(
+        F.col("sid").alias("a"), F.col("s").alias("sa"), "len",
+        F.explode(F.sequence("len", F.col("len") + d)).alias("len_b"),
+    )
+    hi = short.select(
+        F.col("sid").alias("b"), F.col("s").alias("sb"),
+        F.col("len").alias("len_b"),
+    )
+    # levenshtein is symmetric, so only the ids need ordering
+    short_cand = (
+        lo.join(hi, "len_b")
+        .where((F.col("len") < F.col("len_b")) | (F.col("a") < F.col("b")))
+        .select(
+            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"),
+            "sa", "sb",
+        )
+    )
+    return cand.unionByName(short_cand).select(
         "a",
         "b",
         F.levenshtein("sa", "sb").alias("dist"),

@@ -12,33 +12,56 @@ from osm_spark.plans.labelprop import label_propagation
 from osm_spark.text.editjoin import edit_distance_join
 
 
-def test_editjoin_exact_recall_vs_bruteforce(spark):
+def lev(a, b):
+    dp = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        prev, dp[0] = dp[0], i
+        for j, cb in enumerate(b, 1):
+            prev, dp[j] = dp[j], min(
+                dp[j] + 1, dp[j - 1] + 1, prev + (ca != cb)
+            )
+    return dp[len(b)]
+
+
+def _bruteforce(strs, d):
     import itertools
 
-    def lev(a, b):
-        dp = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, dp[0] = dp[0], i
-            for j, cb in enumerate(b, 1):
-                prev, dp[j] = dp[j], min(
-                    dp[j] + 1, dp[j - 1] + 1, prev + (ca != cb)
-                )
-        return dp[len(b)]
+    return {
+        (a, b, lev(sa, sb))
+        for (a, sa), (b, sb) in itertools.combinations(strs, 2)
+        if lev(sa, sb) <= d
+    }
 
+
+def test_editjoin_exact_recall_vs_bruteforce(spark):
     strs = [
         (i, f"item-{i // 4:03d}-{i % 4}") for i in range(60)
     ] + [(100, "utterly-different-string"), (101, "item-999-9")]
-    want = {
-        (a, b, lev(sa, sb))
-        for (a, sa), (b, sb) in itertools.combinations(strs, 2)
-        if lev(sa, sb) <= 2
-    }
+    want = _bruteforce(strs, 2)
     df = spark.createDataFrame(strs, ["sid", "s"])
     got = {
         (r["a"], r["b"], r["dist"])
         for r in edit_distance_join(df, "sid", "s", d=2, q=2).collect()
     }
     assert got == want and len(want) > 50
+
+
+def test_editjoin_pairs_short_strings_sharing_no_gram(spark):
+    """Strings with at most d*q distinct grams can be within d while
+    sharing no gram ('ab' vs 'cd' at q=2, d=2); they still pair, each
+    pair once, and short-long pairs still come from the prefix join."""
+    strs = [
+        (1, "ab"), (2, "cd"), (3, ""), (4, "x"), (5, "xyz"), (6, "abcd"),
+        (7, "aaaaaaaa"), (8, "aaaaaab"), (9, "abcde"), (10, "zzabc"),
+        (11, "abcdefgh"), (12, "abcdefxy"), (13, "qrstuvwx"), (14, "ba"),
+    ]
+    df = spark.createDataFrame(strs, ["sid", "s"])
+    for d, q in ((2, 2), (1, 2), (1, 3), (2, 1)):
+        rows = edit_distance_join(df, "sid", "s", d=d, q=q).collect()
+        got = [(r["a"], r["b"], r["dist"]) for r in rows]
+        assert len(got) == len(set(got)), (d, q)
+        assert set(got) == _bruteforce(strs, d), (d, q)
+    assert (1, 2, 2) in _bruteforce(strs, 2)
 
 
 def test_labelprop_spreads_majority_and_respects_seeds(spark):

@@ -114,3 +114,95 @@ def test_containment_inclusive_boundary(spark):
         tiles.contains("lat", "lon", F.lit(b.s), F.lit(b.n), F.lit(b.w), F.lit(b.e)).alias("c")
     ).collect()
     assert [r.c for r in got] == [True, True, False]
+
+
+def _ref_tile(lat, lon, z):
+    """tile_x/tile_y at zoom z, in the column expressions' operation
+    order (so doubles round the same way)."""
+    n = 1 << z
+    xf = (lon + 180.0) / 360.0 * float(n)
+    yf = (1.0 - math.log(math.tan(lat * (math.pi / 360.0) + math.pi / 4.0))
+          / math.pi) / 2.0 * float(n)
+    return min(max(math.floor(xf), 0), n - 1), min(max(math.floor(yf), 0), n - 1)
+
+
+def _ref_pyramid(points, z_max, z_min):
+    """Per-level reference: every level tiled from the points directly,
+    no parent shift."""
+    from collections import Counter
+
+    return Counter(
+        (z,) + _ref_tile(lat, lon, z)
+        for z in range(z_min, z_max + 1)
+        for lat, lon in points
+    )
+
+
+def _by_level(rows):
+    got = {}
+    for r in rows:
+        k = (r["zoom"], r["tile_x"], r["tile_y"])
+        assert k not in got, k
+        got[k] = r["n_pages"]
+    return got
+
+
+def test_pyramid_matches_per_level_reference(spark, tmp_path):
+    """Both pyramid entry points give, at every level, exactly the
+    counts of tiling the points at that level: edge tiles x = 0 and
+    x = 2^z - 1, latitudes past the +-85.05 clamp, a hot-spot pile-up,
+    z_max = 18 and z_min == z_max; out-of-range zooms raise."""
+    from osm_spark.pipeline import pages
+
+    points = (
+        [(0.0, -180.0), (10.0, -179.9999), (-10.0, 179.9999), (0.0, 179.99999)]
+        + [(89.9, 12.0), (85.06, -3.0), (-85.06, 3.0), (-89.9, -12.0)]
+        + [(pages.HOT_LAT, pages.HOT_LON)] * 40
+        + [(-33.86, 151.21), (51.5, -0.12), (51.5001, -0.1201), (1e-9, 1e-9)]
+    )
+    df = spark.createDataFrame(points, "lat double, lon double")
+    for z_max, z_min in ((18, 0), (12, 0), (10, 4), (7, 7), (0, 0)):
+        pts = df.select(
+            tiles.tile_x("lon", z_max).alias("x"), tiles.tile_y("lat", z_max).alias("y")
+        )
+        got = tiles.pyramid_counts(pts, z_max, z_min).select(
+            tiles.key_zoom("key").alias("zoom"),
+            tiles.key_x("key").alias("tile_x"),
+            tiles.key_y("key").alias("tile_y"),
+            F.col("n").alias("n_pages"),
+        )
+        want = _ref_pyramid(points, z_max, z_min)
+        assert _by_level(got.collect()) == want, (z_max, z_min)
+        assert {z for z, _, _ in want} == set(range(z_min, z_max + 1))
+    # the clamp and both x edges really are exercised
+    assert {_ref_tile(lat, 0.0, 18)[1] for lat in (89.9, -89.9)} == {0, (1 << 18) - 1}
+    assert {_ref_tile(0.0, lon, 18)[0] for lon in (-180.0, 179.9999)} == {0, (1 << 18) - 1}
+
+    # the pipeline entry on a documents table: x-edge doc_ids (lon
+    # -179.999 and 179.999) and every 20th doc on the hot city
+    ids = [0, 20, 40, 60, 155_369, 204_631, 1, 2, 3, 77, 99_999, 123_457]
+    sf_dir = str(tmp_path)
+    spark.createDataFrame([(i,) for i in ids], "doc_id long").write.parquet(
+        f"{sf_dir}/documents.parquet"
+    )
+    geo = [
+        (
+            pages.HOT_LAT if i % 20 == 0 else (i * 7919 % 170000) / 1000.0 - 85.0,
+            pages.HOT_LON if i % 20 == 0 else (i * 104729 % 360000) / 1000.0 - 180.0,
+        )
+        for i in ids
+    ]
+    assert {_ref_tile(*geo[4], 18)[0], _ref_tile(*geo[5], 18)[0]} == {0, (1 << 18) - 1}
+    for z_max, z_min in ((18, 0), (12, 0), (7, 7)):
+        pyr = pages.tile_pyramid_counts(spark, sf_dir, z_max=z_max, z_min=z_min)
+        assert pyr.schema.simpleString() == (
+            "struct<tile_x:bigint,tile_y:bigint,n_pages:bigint,zoom:int>"
+        )
+        assert [f.nullable for f in pyr.schema] == [False, False, z_min < z_max, False]
+        assert _by_level(pyr.collect()) == _ref_pyramid(geo, z_max, z_min)
+
+    for z_max, z_min in ((3, 5), (4, -1), (29, 0), (-1, -1)):
+        with pytest.raises(ValueError):
+            pages.tile_pyramid_counts(spark, sf_dir, z_max=z_max, z_min=z_min)
+        with pytest.raises(ValueError):
+            tiles.pyramid_counts(df, z_max, z_min)
