@@ -28,7 +28,6 @@ into the engine's spatial join):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -121,6 +120,8 @@ def pip_join_broadcast(
     )
 
     def gen(batches):
+        import pandas as pd
+
         polys = bpolys.value
         for pdf in batches:
             px = pdf[x_col].to_numpy(dtype=np.float64)
@@ -199,29 +200,7 @@ def pip_join_cells(
         join_keys = join_keys + ["_salt"]
 
     cand = pts.join(cells, on=join_keys, how="inner").drop("tile_x", "tile_y", "_salt")
-
-    out_fields = [f for f in cand.schema.fields if f.name not in ("xs", "ys", "xmin", "xmax", "ymin", "ymax")]
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    def refine(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf[out_cols]
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[x_col].to_numpy(dtype=np.float64)
-            py = pdf[y_col].to_numpy(dtype=np.float64)
-            # vectorize per distinct polygon within the Arrow batch
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                xs = np.asarray(pdf["xs"].iloc[idx[0]], dtype=np.float64)
-                ys = np.asarray(pdf["ys"].iloc[idx[0]], dtype=np.float64)
-                keep[idx] = ring_contains(xs, ys, px[idx], py[idx])
-            yield pdf.loc[keep, out_cols]
-
-    return cand.mapInPandas(refine, schema=out_schema)
+    return _raycast_refine(cand, x_col, y_col)
 
 
 def pip_join_broadcast_wkb(
@@ -252,6 +231,8 @@ def pip_join_broadcast_wkb(
     )
 
     def gen(batches):
+        import pandas as pd
+
         prepared = []
         for pid, buf in bpolys.value:
             _, rings = W.decode(buf)

@@ -1,10 +1,13 @@
 """Segment joining / ring assembly / multipolygon construction.
 
 The greedy endpoint-matching algorithm is inherently sequential per
-relation, so it lives in plain Python kernels executed via
-``applyInPandas`` grouped by relation id (relations are small — SURVEY
-§7 "hard parts"). Semantics are ported branch-exactly from the
-reference:
+relation, so it lives in plain Python kernels (relations are small —
+SURVEY §7 "hard parts"). The Spark layer collects each relation's
+members and way geometries in the JVM (one aggregate, sorted by member
+index and capped there) and runs the kernels in one ``mapInArrow``
+pass, relation by relation over each Arrow batch, writing the output
+rings as flat Arrow arrays. Semantics are ported branch-exactly from
+the reference:
 
 - join_segments        internal/mputil/join.go:4-80 (incl. the
                        first-half shift-up / second-half shift-down
@@ -295,6 +298,103 @@ def build_route_linestrings(
 
 
 # ---------------------------------------------------------------- Spark layer
+_LINE = "array<struct<lon:double,lat:double>>"
+
+
+def _assemble_per_relation(relations, way_geoms, fields, max_members, out_schema, build):
+    """Shared Spark layer of the assemblies: explode members -> left
+    join way geometries on ref -> one member list per relation, sorted
+    by member index and capped at ``max_members`` in the JVM -> one
+    mapInArrow pass whose kernel calls ``build(members, way_lines,
+    capped)`` per relation. ``build`` returns the relation's output rows
+    without ``rel_id``; the one array column of ``out_schema`` carries
+    (lon, lat) tuples and is written as flat Arrow arrays.
+
+    The cap is the mega-relation scale guard: the greedy ring join is
+    a sequential per-relation kernel, so a coastline-sized relation
+    (10^4-10^5 members) would pin one task for minutes; ``capped`` lets
+    ``build`` surface the truncation through the reference's own taint
+    channel (mputil.go Group's tainted flag covers exactly "geometry
+    incomplete")."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import ArrayType
+
+    exploded = relations.select(
+        "rel_id", F.posexplode("members").alias("midx", "m")
+    ).select("rel_id", "midx", *[F.col(f"m.{f}").alias(f) for f in fields])
+    member_lists = (
+        exploded.join(way_geoms, "ref", "left")
+        .groupBy("rel_id")
+        .agg(F.collect_list(F.struct("midx", *fields, "line")).alias("ms"))
+        .select(
+            "rel_id",
+            (F.size("ms") > max_members).alias("capped"),
+            F.slice(F.array_sort("ms"), 1, max_members).alias("ms"),
+        )
+    )
+    arrow_schema = to_arrow_schema(out_schema)
+    line_at = next(
+        i for i, f in enumerate(out_schema.fields) if isinstance(f.dataType, ArrayType)
+    )
+
+    def to_batch(rows):
+        cols = list(zip(*rows))
+        arrays = []
+        for i, col in enumerate(cols):
+            typ = arrow_schema.field(i).type
+            if i != line_at:
+                arrays.append(pa.array(col, type=typ))
+                continue
+            offsets = np.zeros(len(col) + 1, dtype=np.int32)
+            np.cumsum([len(line) for line in col], out=offsets[1:])
+            pts = np.asarray(
+                [p for line in col for p in line], dtype=np.float64
+            ).reshape(-1, 2)
+            arrays.append(
+                pa.ListArray.from_arrays(
+                    pa.array(offsets),
+                    pa.StructArray.from_arrays(
+                        [pa.array(pts[:, 0]), pa.array(pts[:, 1])],
+                        fields=list(typ.value_type),
+                    ),
+                    type=typ,
+                )
+            )
+        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    def kernel(batches):
+        for batch in batches:
+            rel_ids = batch.column(0).to_pylist()
+            capped = batch.column(1).to_pylist()
+            ms = batch.column(2)
+            moff = ms.offsets.to_numpy()
+            st = ms.values
+            vals = {f: st.field(f).to_pylist() for f in fields}
+            refs = vals["ref"]
+            lines = st.field("line")
+            has_line = lines.is_valid().to_numpy(zero_copy_only=False)
+            loff = lines.offsets.to_numpy()
+            lons = lines.values.field("lon").to_numpy(zero_copy_only=False).tolist()
+            lats = lines.values.field("lat").to_numpy(zero_copy_only=False).tolist()
+            rows = []
+            for i, rel_id in enumerate(rel_ids):
+                members, way_lines = [], {}
+                for j in range(moff[i], moff[i + 1]):
+                    members.append({f: vals[f][j] for f in fields})
+                    if has_line[j]:
+                        a, b = loff[j], loff[j + 1]
+                        way_lines[refs[j]] = list(zip(lons[a:b], lats[a:b]))
+                rows.extend(
+                    (rel_id, *row) for row in build(members, way_lines, capped[i])
+                )
+            if rows:
+                yield to_batch(rows)
+
+    return member_lists.mapInArrow(kernel, schema=out_schema)
+
+
 def assemble_multipolygons_df(relations, way_geoms, max_members: int = 20000):
     """Distributed multipolygon assembly (SURVEY §3.3 Spark shape).
 
@@ -303,167 +403,61 @@ def assemble_multipolygons_df(relations, way_geoms, max_members: int = 20000):
     way_geoms: (ref long, line array<struct<lon:double, lat:double>>)
 
     Plan: explode members -> shuffle join way geometries on ref ->
-    regroup per relation -> sequential greedy assembly in an
-    applyInPandas kernel (relations are small; the shuffle/regroup is
-    all JVM). Returns one row per ring:
+    collect each relation's members in one aggregate (all JVM) -> one
+    mapInArrow pass running the sequential greedy assembly
+    (``build_multipolygon``) relation by relation. Relations past
+    ``max_members`` members keep their first ``max_members`` and come
+    out tainted. Returns one row per ring:
     (rel_id, poly_idx, ring_idx, ring array<struct<lon,lat>>,
      tainted, old_style).
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType, BooleanType, DoubleType, IntegerType, LongType,
-        StructField, StructType,
+    from pyspark.sql.types import _parse_datatype_string
+
+    out_schema = _parse_datatype_string(
+        f"rel_id long, poly_idx int, ring_idx int, ring {_LINE}, "
+        "tainted boolean, old_style boolean"
     )
 
-    exploded = relations.select(
-        "rel_id", F.posexplode("members").alias("midx", "m")
-    ).select(
-        "rel_id",
-        "midx",
-        F.col("m.type").alias("mtype"),
-        F.col("m.ref").alias("ref"),
-        F.col("m.role").alias("role"),
-        F.col("m.orientation").alias("orientation"),
-    )
-    joined = exploded.join(way_geoms, "ref", "left")
-
-    out_schema = StructType(
-        [
-            StructField("rel_id", LongType()),
-            StructField("poly_idx", IntegerType()),
-            StructField("ring_idx", IntegerType()),
-            StructField(
-                "ring",
-                ArrayType(
-                    StructType(
-                        [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
-                    )
-                ),
-            ),
-            StructField("tainted", BooleanType()),
-            StructField("old_style", BooleanType()),
-        ]
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("midx")
-        rel_id = int(pdf["rel_id"].iloc[0])
-        # mega-relation scale guard: the greedy ring join is a sequential
-        # per-group kernel, so a coastline-sized relation (10^4-10^5
-        # members) would pin one task for minutes. Cap the member list
-        # and surface the truncation through the reference's own taint
-        # channel (mputil.go Group's tainted flag covers exactly
-        # "geometry incomplete").
-        capped = len(pdf) > max_members
-        if capped:
-            pdf = pdf.iloc[:max_members]
-        members = []
-        way_lines = {}
-        for r in pdf.itertuples():
-            members.append(
-                {
-                    "type": r.mtype,
-                    "ref": int(r.ref),
-                    "role": r.role,
-                    "orientation": int(r.orientation or 0),
-                }
-            )
-            if r.line is not None and not (isinstance(r.line, float)):
-                way_lines[int(r.ref)] = [
-                    (float(p["lon"]), float(p["lat"])) for p in r.line
-                ]
+    def build(members, way_lines, capped):
         res = build_multipolygon(members, way_lines)
-        if res is not None and capped:
-            res["tainted"] = True
-        rows = []
-        if res is not None:
-            for pi, poly in enumerate(res["polygons"]):
-                for ri, ring in enumerate(poly):
-                    rows.append(
-                        (
-                            rel_id,
-                            pi,
-                            ri,
-                            [{"lon": x, "lat": y} for x, y in ring],
-                            res["tainted"],
-                            res["old_style"],
-                        )
-                    )
-        return pd.DataFrame(
-            rows,
-            columns=["rel_id", "poly_idx", "ring_idx", "ring", "tainted", "old_style"],
-        )
+        if res is None:
+            return []
+        tainted = res["tainted"] or capped
+        return [
+            (pi, ri, ring, tainted, res["old_style"])
+            for pi, poly in enumerate(res["polygons"])
+            for ri, ring in enumerate(poly)
+        ]
 
-    return joined.groupBy("rel_id").applyInPandas(kernel, schema=out_schema)
+    return _assemble_per_relation(
+        relations, way_geoms, ("type", "ref", "role", "orientation"),
+        max_members, out_schema, build,
+    )
 
 
 def assemble_routes_df(relations, way_geoms, max_members: int = 20000):
     """Distributed route-linestring assembly (convert.go:233-301 via the
-    same explode -> join -> applyInPandas shape as multipolygons).
+    same explode -> join -> collect -> mapInArrow shape as
+    multipolygons).
 
     relations: (rel_id long, members array<struct<type:string, ref:long,
-               role:string, orientation:int>>)
+               ...>>)
     way_geoms: (ref long, line array<struct<lon:double, lat:double>>)
 
     Returns one row per joined line:
     (rel_id, line_idx, line array<struct<lon,lat>>, tainted).
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType, BooleanType, DoubleType, IntegerType, LongType,
-        StructField, StructType,
+    from pyspark.sql.types import _parse_datatype_string
+
+    out_schema = _parse_datatype_string(
+        f"rel_id long, line_idx int, line {_LINE}, tainted boolean"
     )
 
-    exploded = relations.select(
-        "rel_id", F.posexplode("members").alias("midx", "m")
-    ).select(
-        "rel_id",
-        "midx",
-        F.col("m.type").alias("mtype"),
-        F.col("m.ref").alias("ref"),
-    )
-    joined = exploded.join(way_geoms, "ref", "left")
-
-    out_schema = StructType(
-        [
-            StructField("rel_id", LongType()),
-            StructField("line_idx", IntegerType()),
-            StructField(
-                "line",
-                ArrayType(
-                    StructType(
-                        [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
-                    )
-                ),
-            ),
-            StructField("tainted", BooleanType()),
-        ]
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("midx")
-        rel_id = int(pdf["rel_id"].iloc[0])
-        # same mega-relation guard as assemble_multipolygons_df
-        capped = len(pdf) > max_members
-        if capped:
-            pdf = pdf.iloc[:max_members]
-        members = []
-        way_lines = {}
-        for r in pdf.itertuples():
-            members.append({"type": r.mtype, "ref": int(r.ref)})
-            if r.line is not None and not isinstance(r.line, float):
-                way_lines[int(r.ref)] = [
-                    (float(p["lon"]), float(p["lat"])) for p in r.line
-                ]
+    def build(members, way_lines, capped):
         res = build_route_linestrings(members, way_lines)
-        if capped:
-            res["tainted"] = True
-        rows = [
-            (rel_id, li, [{"lon": x, "lat": y} for x, y in line], res["tainted"])
-            for li, line in enumerate(res["lines"])
-        ]
-        return pd.DataFrame(rows, columns=["rel_id", "line_idx", "line", "tainted"])
+        tainted = res["tainted"] or capped
+        return [(li, line, tainted) for li, line in enumerate(res["lines"])]
 
-    return joined.groupBy("rel_id").applyInPandas(kernel, schema=out_schema)
+    return _assemble_per_relation(
+        relations, way_geoms, ("type", "ref"), max_members, out_schema, build
+    )

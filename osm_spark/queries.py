@@ -266,7 +266,7 @@ FROM p JOIN dir USING (rel_id)
 def q_route_linestring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Route relations (3 member ways forming a chain, middle way
     REVERSED so the greedy join must flip it) assembled through the
-    distributed applyInPandas kernel; output canonicalized to ascending
+    distributed mapInArrow kernel; output canonicalized to ascending
     endpoint order so Spark and the oracle agree on direction."""
     from osm_spark.geom.assembly import assemble_routes_df
 
@@ -1916,7 +1916,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_multipolygon_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed ring assembly through the real applyInPandas kernel:
+    """Distributed ring assembly through the real mapInArrow kernel:
     split outer segments joined greedily, inner hole assigned via
     ray-cast PIP, winding normalized (outer CCW, inner CW)."""
     from osm_spark.geom.assembly import assemble_multipolygons_df

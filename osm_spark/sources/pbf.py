@@ -762,25 +762,92 @@ SUPPORTED_FEATURES = frozenset(
 )
 
 
+def _check_header(payload: bytes) -> None:
+    """The reference scanner's header feature check (decode.go:
+    unsupported required_features abort the scan): raise on a header
+    that requires a feature this decoder does not implement."""
+    hdr = decode_header(payload)
+    unsupported = [
+        f for f in hdr["required_features"] if f not in SUPPORTED_FEATURES
+    ]
+    if unsupported:
+        raise ValueError(f"PBF header requires unsupported features: {unsupported}")
+
+
 def _split_data_blobs(pbf_bytes: bytes) -> list[tuple[int, bytearray]]:
-    """Framing walk + the reference scanner's header feature check
-    (decode.go: unsupported required_features abort the scan): returns
-    the OSMData blobs, raising on a header that requires a feature this
-    decoder does not implement."""
+    """Framing walk + header feature check over a byte string: returns
+    the OSMData blobs."""
     blobs = []
     for i, (t, b) in enumerate(split_blobs(pbf_bytes)):
         if t == "OSMHeader":
-            hdr = decode_header(decompress_blob(b))
-            unsupported = [
-                f for f in hdr["required_features"] if f not in SUPPORTED_FEATURES
-            ]
-            if unsupported:
-                raise ValueError(
-                    f"PBF header requires unsupported features: {unsupported}"
-                )
+            _check_header(decompress_blob(b))
         elif t == "OSMData":
             blobs.append((i, bytearray(b)))
     return blobs
+
+
+def split_count(
+    total_bytes: int, max_partition_bytes: int, open_cost: int, min_partitions: int
+) -> int:
+    """Partitions Spark's file source gives ONE file of ``total_bytes``:
+    FilePartition.maxSplitBytes = min(maxPartitionBytes,
+    max(openCostInBytes, (bytes + openCostInBytes) / minPartitionNum)),
+    then one partition per split of that size. The open cost is paid
+    once per file, not once per blob."""
+    per_core = (total_bytes + open_cost) // max(1, min_partitions)
+    max_split = min(max_partition_bytes, max(open_cost, per_core))
+    return max(1, -(-total_bytes // max_split))
+
+
+def _file_partitions(spark, path: str):
+    """Driver side of every .osm.pbf file scan: walk the framing by
+    seeks, run the header feature check, and split the OSMData blobs
+    into contiguous runs, as many as Spark would split a file of the
+    same blob bytes into (``split_count`` over the session's
+    ``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes`` /
+    ``minPartitionNum`` confs, the last defaulting to the leaf-node
+    parallelism). A small file is one task, not one per core.
+
+    Returns ``(df, blobs)``: ``df`` is ``spark.range`` with one row and
+    one partition per run (building it starts no job), and
+    ``blobs(run_ids)`` yields the inflated payloads of those runs in
+    file order; executors pread their own blobs, so nothing but frame
+    coordinates crosses the driver."""
+    datas = []
+    with open(path, "rb") as f:
+        for btype, off, ln in walk_frames(path):
+            if btype == "OSMHeader":
+                f.seek(off)
+                _check_header(decompress_blob(f.read(ln)))
+            elif btype == "OSMData":
+                datas.append((off, ln))
+    conf = spark._jsparkSession.sessionState().conf()
+    min_parts = conf.filesMinPartitionNum()
+    total = sum(ln for _, ln in datas)
+    n = min(
+        max(1, len(datas)),
+        split_count(
+            total,
+            conf.filesMaxPartitionBytes(),
+            conf.filesOpenCostInBytes(),
+            min_parts.get() if min_parts.isDefined()
+            else spark._jsparkSession.leafNodeDefaultParallelism(),
+        ),
+    )
+    runs: list[list[tuple[int, int]]] = [[] for _ in range(n)]
+    start = 0
+    for off, ln in datas:  # a blob joins the run its first byte falls in
+        runs[min(n - 1, start * n // max(1, total))].append((off, ln))
+        start += ln
+
+    def blobs(run_ids):
+        with open(path, "rb") as f:
+            for r in run_ids:
+                for off, ln in runs[r]:
+                    f.seek(off)
+                    yield decompress_blob(f.read(ln))
+
+    return spark.range(0, n, 1, n), blobs
 
 
 _NODE_COL_TYPES = {
@@ -1006,74 +1073,19 @@ def read_pbf_file_nodes_arrow(
     (mapInArrow) — no pandas, no per-node Python objects. Requires
     DenseNodes-only blocks (the planet shape); plain-Node groups raise
     (scan those files with read_pbf_file_nodes)."""
-    import pyarrow as pa
-    from pyspark.sql.types import _parse_datatype_string
-
-    bad = [c for c in columns if c not in _NODE_COL_TYPES]
-    if bad:
-        raise ValueError(f"unknown node columns {bad}")
-    want_tags = "tags" in columns
     info_cols = ("version", "timestamp", "changeset", "uid", "user", "visible")
+    want_tags = "tags" in columns
     want_info = any(c in columns for c in info_cols)
 
-    frames = walk_frames(path)
-    datas = [
-        (path, off, ln) for btype, off, ln in frames if btype == "OSMData"
-    ]
-    df = spark.createDataFrame(datas, "path string, off long, len long")
-    out_schema = _parse_datatype_string(
-        "struct<" + ",".join(f"{c}:{_NODE_COL_TYPES[c]}" for c in columns) + ">"
+    def decode(payload, columns):
+        return decode_block_nodes_arrow(
+            payload, want_tags=want_tags, want_info=want_info
+        )
+
+    # 128k rows per batch amortizes per-batch overhead downstream
+    return _read_pbf_file_arrow_kind(
+        spark, path, columns, _NODE_COL_TYPES, decode, coalesce_rows=128_000
     )
-
-    COALESCE_ROWS = 128_000  # amortize per-batch overhead downstream
-
-    def gen(batches):
-        handles: dict[str, object] = {}
-        pending: list[dict] = []
-        pending_rows = 0
-
-        def flush():
-            cols_arrays = []
-            for c in columns:
-                vals = [
-                    ch[c]
-                    if isinstance(ch[c], pa.Array)
-                    else pa.array(ch[c])
-                    for ch in pending
-                ]
-                cols_arrays.append(
-                    vals[0] if len(vals) == 1 else pa.concat_arrays(vals)
-                )
-            return pa.RecordBatch.from_arrays(
-                cols_arrays, names=list(columns)
-            )
-
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            paths = batch.column(idx["path"]).to_pylist()
-            offs = batch.column(idx["off"]).to_pylist()
-            lens = batch.column(idx["len"]).to_pylist()
-            for p, off, ln in zip(paths, offs, lens):
-                f = handles.get(p)
-                if f is None:
-                    f = handles[p] = open(p, "rb")
-                f.seek(off)
-                chunk = decode_block_nodes_arrow(
-                    decompress_blob(f.read(ln)),
-                    want_tags=want_tags,
-                    want_info=want_info,
-                )
-                if chunk is None:
-                    continue
-                pending.append(chunk)
-                pending_rows += len(chunk["id"])
-                if pending_rows >= COALESCE_ROWS:
-                    yield flush()
-                    pending, pending_rows = [], 0
-        if pending:
-            yield flush()
-
-    return df.mapInArrow(gen, schema=out_schema)
 
 
 _WAY_COL_TYPES = {
@@ -1588,31 +1600,26 @@ def decode_block_relations_arrow(
 
 
 def _read_pbf_file_arrow_kind(
-    spark, path: str, columns, col_types: dict, decode_fn
+    spark, path: str, columns, col_types: dict, decode_fn,
+    coalesce_rows: int = 64_000,
 ):
-    """Shared mapInArrow scaffolding for the way/relation file scans —
-    the group-shaped twin of read_pbf_file_nodes_arrow: the driver
-    walks frame coordinates only, executors pread + inflate their own
-    blobs and yield coalesced RecordBatches."""
+    """Shared mapInArrow scaffolding for the Arrow file scans: the
+    driver splits the file (``_file_partitions``), executors pread +
+    inflate their own blobs, decode them with ``decode_fn`` and yield
+    RecordBatches coalesced to ``coalesce_rows``."""
     import pyarrow as pa
     from pyspark.sql.types import _parse_datatype_string
 
     bad = [c for c in columns if c not in col_types]
     if bad:
         raise ValueError(f"unknown columns {bad}")
-    frames = walk_frames(path)
-    datas = [
-        (path, off, ln) for btype, off, ln in frames if btype == "OSMData"
-    ]
-    df = spark.createDataFrame(datas, "path string, off long, len long")
+    df, blobs = _file_partitions(spark, path)
     out_schema = _parse_datatype_string(
         "struct<" + ",".join(f"{c}:{col_types[c]}" for c in columns) + ">"
     )
     cols = tuple(columns)
-    COALESCE_ROWS = 64_000
 
     def gen(batches):
-        handles: dict[str, object] = {}
         pending: list[dict] = []
         pending_rows = 0
 
@@ -1629,23 +1636,13 @@ def _read_pbf_file_arrow_kind(
             return pa.RecordBatch.from_arrays(arrays, names=list(cols))
 
         for batch in batches:
-            idx = {nm: i for i, nm in enumerate(batch.schema.names)}
-            paths = batch.column(idx["path"]).to_pylist()
-            offs = batch.column(idx["off"]).to_pylist()
-            lens = batch.column(idx["len"]).to_pylist()
-            for p, off, ln in zip(paths, offs, lens):
-                f = handles.get(p)
-                if f is None:
-                    f = handles[p] = open(p, "rb")
-                f.seek(off)
-                chunk = decode_fn(
-                    decompress_blob(f.read(ln)), columns=cols
-                )
+            for payload in blobs(batch.column(0).to_pylist()):
+                chunk = decode_fn(payload, columns=cols)
                 if chunk is None:
                     continue
                 pending.append(chunk)
                 pending_rows += len(chunk[cols[0]])
-                if pending_rows >= COALESCE_ROWS:
+                if pending_rows >= coalesce_rows:
                     yield flush()
                     pending, pending_rows = [], 0
         if pending:
@@ -1706,10 +1703,11 @@ def read_pbf_file_nodes(
 ):
     """Node scan over a .osm.pbf FILE — the 100 TB shape: the driver
     walks framing with seeks (offsets only), validates the OSMHeader
-    feature set, and ships (path, offset, length) rows; every executor
-    preads and decodes its own blobs. Nothing but frame coordinates
-    ever crosses the driver (read_pbf_nodes ships the whole byte
-    string — fine for replication diffs, wrong for a planet file)."""
+    feature set, and splits the blobs into Spark-file-split-sized runs
+    (``_file_partitions``); every executor preads and decodes its own
+    blobs. Nothing but frame coordinates ever crosses the driver
+    (read_pbf_nodes ships the whole byte string — fine for replication
+    diffs, wrong for a planet file)."""
     import pandas as pd
     from pyspark.sql.types import _parse_datatype_string
 
@@ -1720,43 +1718,17 @@ def read_pbf_file_nodes(
     info_cols = ("version", "timestamp", "changeset", "uid", "user", "visible")
     want_info = any(c in columns for c in info_cols)
 
-    frames = walk_frames(path)
-    with open(path, "rb") as f:
-        for btype, off, ln in frames:
-            if btype == "OSMHeader":
-                f.seek(off)
-                hdr = decode_header(decompress_blob(f.read(ln)))
-                unsupported = [
-                    x
-                    for x in hdr["required_features"]
-                    if x not in SUPPORTED_FEATURES
-                ]
-                if unsupported:
-                    raise ValueError(
-                        "PBF header requires unsupported features: "
-                        f"{unsupported}"
-                    )
-    datas = [
-        (path, off, ln) for btype, off, ln in frames if btype == "OSMData"
-    ]
-    df = spark.createDataFrame(datas, "path string, off long, len long")
+    df, blobs = _file_partitions(spark, path)
     out_schema = _parse_datatype_string(
         "struct<" + ",".join(f"{c}:{_NODE_COL_TYPES[c]}" for c in columns) + ">"
     )
 
     def gen(batches):
-        handles: dict[str, object] = {}
         for pdf in batches:
             rows = []
-            for p, off, ln in zip(pdf["path"], pdf["off"], pdf["len"]):
-                f = handles.get(p)
-                if f is None:
-                    f = handles[p] = open(p, "rb")
-                f.seek(int(off))
+            for payload in blobs(pdf["id"].tolist()):
                 blk = decode_primitive_block(
-                    decompress_blob(f.read(int(ln))),
-                    want_tags=want_tags,
-                    want_info=want_info,
+                    payload, want_tags=want_tags, want_info=want_info
                 )
                 n = blk["nodes"]
                 if n:
@@ -1854,32 +1826,18 @@ def _read_pbf_groups(spark, pbf_bytes: bytes, kind: str, out_schema, to_rows):
 
 
 def _read_pbf_file_groups(spark, path: str, kind: str, out_schema, to_rows):
-    """File-based twin of _read_pbf_groups: frame coordinates from the
-    driver's seek walk, payload preads on the executors (same contract
-    as read_pbf_file_nodes)."""
+    """File-based twin of _read_pbf_groups: the same file split and
+    executor-side preads as read_pbf_file_nodes."""
     import pandas as pd
 
-    datas = [
-        (path, off, ln)
-        for btype, off, ln in walk_frames(path)
-        if btype == "OSMData"
-    ]
-    df = spark.createDataFrame(datas, "path string, off long, len long")
+    df, blobs = _file_partitions(spark, path)
     empty = {f.name: [] for f in out_schema.fields}
 
     def gen(batches):
-        handles: dict[str, object] = {}
         for pdf in batches:
             rows = []
-            for p, off, ln in zip(pdf["path"], pdf["off"], pdf["len"]):
-                f = handles.get(p)
-                if f is None:
-                    f = handles[p] = open(p, "rb")
-                f.seek(int(off))
-                blk = decode_primitive_block(
-                    decompress_blob(f.read(int(ln)))
-                )
-                rows.extend(to_rows(blk[kind]))
+            for payload in blobs(pdf["id"].tolist()):
+                rows.extend(to_rows(decode_primitive_block(payload)[kind]))
             # see _read_pbf_groups: never yield an empty DataFrame —
             # float64-defaulted columns break the Arrow cast
             if rows:

@@ -157,3 +157,124 @@ def test_route_linestrings_with_reversal():
     way_lines = {1: [(0, 0), (1, 1)], 2: [(2, 2), (1, 1)]}
     out = A.build_route_linestrings(members, way_lines)
     assert out["lines"] == [[(2, 2), (1, 1), (0, 0)]]
+
+
+# ------------------------------------------------- distributed assembly
+SQUARE = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
+HOLE = [(1.0, 1.0), (1.0, 2.0), (2.0, 2.0), (2.0, 1.0), (1.0, 1.0)]
+FAR = [(10.0, 10.0), (14.0, 10.0), (14.0, 14.0), (10.0, 14.0), (10.0, 10.0)]
+
+# ref -> line; refs 30-33 split SQUARE into four pieces, 32 reversed
+WAYS = {
+    10: SQUARE, 11: HOLE, 12: FAR,
+    20: [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0)],  # unclosed on its own
+    30: SQUARE[0:2], 31: SQUARE[1:3], 32: SQUARE[2:4][::-1], 33: SQUARE[3:5],
+    40: [],
+}
+
+# rel_id -> [(type, ref, role, orientation)], in member (midx) order
+RELATIONS = {
+    # split outer listed shuffled, one piece annotated, plus a hole
+    1: [("way", 32, "outer", None), ("way", 30, "outer", 1),
+        ("way", 33, "outer", 0), ("way", 11, "inner", None),
+        ("way", 31, "outer", 0)],
+    # a missing way: tainted
+    2: [("way", 10, "outer", 0), ("way", 12, "outer", 0),
+        ("way", 99, "inner", 0)],
+    # old style: one outer way carries the polygon
+    3: [("way", 10, "outer", 0), ("way", 11, "inner", 0),
+        ("node", 7, "label", 0)],
+    # unclosed outer only: no rows
+    4: [("way", 20, "outer", 0)],
+    # repeated member ref and an empty way
+    5: [("way", 12, "outer", 0), ("way", 10, "outer", 0),
+        ("way", 12, "outer", 0), ("way", 40, "outer", 0),
+        ("way", 11, "inner", 0)],
+    # two outers and a hole, then members past the cap below: tainted
+    6: [("way", 12, "outer", 0), ("way", 10, "outer", 0),
+        ("way", 11, "inner", 0), ("way", 40, "outer", 0),
+        ("way", 12, "inner", 0), ("way", 20, "outer", 0)],
+}
+MAX_MEMBERS = 5
+assert [k for k, m in RELATIONS.items() if len(m) > MAX_MEMBERS] == [6]
+
+
+def _spark_inputs(spark, relations):
+    rels = spark.createDataFrame(
+        [
+            (rid, [{"type": t, "ref": r, "role": ro, "orientation": o}
+                   for t, r, ro, o in ms])
+            for rid, ms in relations.items()
+        ],
+        "rel_id long, members array<struct<type:string, ref:long, "
+        "role:string, orientation:int>>",
+    )
+    ways = spark.createDataFrame(
+        [(ref, [{"lon": x, "lat": y} for x, y in line]) for ref, line in WAYS.items()],
+        "ref long, line array<struct<lon:double, lat:double>>",
+    )
+    return rels, ways
+
+
+def _members(ms, max_members):
+    return [
+        {"type": t, "ref": r, "role": ro, "orientation": o}
+        for t, r, ro, o in ms[:max_members]
+    ]
+
+
+def _lines(rows, col):
+    return {
+        k: [(p.lon, p.lat) for p in getattr(r, col)]
+        for r in rows
+        for k in [tuple(getattr(r, c) for c in r.__fields__ if c != col)]
+    }
+
+
+def test_distributed_multipolygons_match_kernel(spark):
+    """assemble_multipolygons_df returns, relation by relation, exactly
+    what build_multipolygon returns for the relation's members in
+    member order (capped at max_members, which taints), with the
+    documented schema."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    rels, ways = _spark_inputs(spark, RELATIONS)
+    df = A.assemble_multipolygons_df(rels, ways, max_members=MAX_MEMBERS)
+    assert df.schema == _parse_datatype_string(
+        "rel_id long, poly_idx int, ring_idx int, "
+        "ring array<struct<lon:double, lat:double>>, "
+        "tainted boolean, old_style boolean"
+    )
+    assert all(f.nullable for f in df.schema.fields)
+    want = {}
+    for rid, ms in RELATIONS.items():
+        way_lines = {r: WAYS[r] for _, r, _, _ in ms if r in WAYS}
+        res = A.build_multipolygon(_members(ms, MAX_MEMBERS), way_lines)
+        if res is None:
+            continue
+        for pi, poly in enumerate(res["polygons"]):
+            for ri, ring in enumerate(poly):
+                flags = (res["tainted"] or len(ms) > MAX_MEMBERS, res["old_style"])
+                want[(rid, pi, ri, *flags)] = ring
+    got = _lines(df.collect(), "ring")
+    assert got == want
+    # the cases each show: tainted missing way and cap, old style,
+    # and an unclosed outer that yields nothing
+    assert {k[0] for k in got} == {1, 2, 3, 5, 6}
+    assert {k[0] for k in got if k[3]} == {2, 6}
+    assert {k[0] for k in got if k[4]} == {3}
+
+
+def test_distributed_routes_match_kernel(spark):
+    rels, ways = _spark_inputs(spark, RELATIONS)
+    df = A.assemble_routes_df(rels, ways, max_members=MAX_MEMBERS)
+    assert [f.name for f in df.schema.fields] == [
+        "rel_id", "line_idx", "line", "tainted"
+    ]
+    want = {}
+    for rid, ms in RELATIONS.items():
+        way_lines = {r: WAYS[r] for _, r, _, _ in ms if r in WAYS}
+        res = A.build_route_linestrings(_members(ms, MAX_MEMBERS), way_lines)
+        for li, line in enumerate(res["lines"]):
+            want[(rid, li, res["tainted"] or len(ms) > MAX_MEMBERS)] = line
+    assert _lines(df.collect(), "line") == want

@@ -157,9 +157,10 @@ def test_pbf_mixed_plain_and_dense_groups():
     assert sorted(out["nodes"]["id"]) == [100, 205, 9000]
 
 
-def test_pbf_scan_rejects_unsupported_required_feature(spark):
+def test_pbf_scan_rejects_unsupported_required_feature(spark, tmp_path):
     """Reference scanner aborts on unknown required_features
-    (decode.go); the Spark scans must too."""
+    (decode.go); the Spark scans must too — byte-string and file
+    readers, scalar and Arrow alike."""
     import pytest
 
     feats = ["OsmSchema-V0.6", "DenseNodes", "Sort.Type_then_ID_v2"]
@@ -171,6 +172,74 @@ def test_pbf_scan_rejects_unsupported_required_feature(spark):
         P.read_pbf_nodes(spark, bytes(buf))
     with pytest.raises(ValueError):
         P.read_pbf_ways(spark, bytes(buf))
+    path = tmp_path / "unsupported.osm.pbf"
+    path.write_bytes(bytes(buf))
+    for read in (
+        P.read_pbf_file_nodes, P.read_pbf_file_ways, P.read_pbf_file_relations,
+        P.read_pbf_file_nodes_arrow, P.read_pbf_file_ways_arrow,
+        P.read_pbf_file_relations_arrow,
+    ):
+        with pytest.raises(ValueError, match="Sort.Type_then_ID_v2"):
+            read(spark, str(path))
+
+
+def test_split_count_follows_spark_file_splits():
+    """File scans get the partition count Spark's FilePartition
+    maxSplitBytes rule gives one file of the same bytes (128 MB max
+    partition, 4 MB open cost by default)."""
+    mb = 1 << 20
+    # the 552 KB benchmark planet on 4 cores: one split
+    assert P.split_count(552 * 1024, 128 * mb, 4 * mb, 4) == 1
+    # just past the 4 MB split size: two
+    assert P.split_count(4 * mb, 128 * mb, 4 * mb, 4) == 1
+    assert P.split_count(4 * mb + 1, 128 * mb, 4 * mb, 4) == 2
+    # a 1 GB extract: capped by maxPartitionBytes on 4 cores,
+    # one split per core on 32
+    assert P.split_count(1024 * mb, 128 * mb, 4 * mb, 4) == 8
+    assert P.split_count(1024 * mb, 128 * mb, 4 * mb, 32) == 32
+    # a smaller maxPartitionBytes splits finer
+    assert P.split_count(1024 * mb, 32 * mb, 4 * mb, 4) == 32
+    assert P.split_count(0, 128 * mb, 4 * mb, 4) == 1
+
+
+def test_file_scan_partitions_follow_conf(spark, tmp_path):
+    """The file readers size their runs from the session's file-split
+    confs: a small file is one task; lowering maxPartitionBytes splits
+    it into more contiguous runs, and the rows are unchanged."""
+    from pyspark.sql import functions as F
+
+    blocks = [
+        P.encode_primitive_block(
+            nodes=[
+                {"id": b * 100 + i, "lat": 0.5 * i, "lon": -0.25 * b}
+                for i in range(40)
+            ]
+        )
+        for b in range(6)
+    ]
+    path = tmp_path / "six.osm.pbf"
+    path.write_bytes(P.encode_pbf(blocks))
+    want = [(b * 100 + i) for b in range(6) for i in range(40)]
+
+    df = P.read_pbf_file_nodes_arrow(spark, str(path), columns=("id",))
+    assert df.rdd.getNumPartitions() == 1
+    assert [r.id for r in df.collect()] == want
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[0], "300")
+        spark.conf.set(keys[1], "1")
+        for read in (P.read_pbf_file_nodes_arrow, P.read_pbf_file_nodes):
+            df = read(spark, str(path), columns=("id",))
+            assert 1 < df.rdd.getNumPartitions() <= 6
+            got = df.select("id", F.spark_partition_id().alias("part")).collect()
+            assert [r.id for r in got] == want
+            # contiguous runs of blocks, spread over more than one task
+            parts = [r.part for r in got]
+            assert parts == sorted(parts) and len(set(parts)) > 1
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
 
 
 def test_pbf_spark_scan_multigroup_blocks(spark):

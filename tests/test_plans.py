@@ -481,3 +481,44 @@ def test_tile_pyramid_shuffles_independent_of_levels(spark):
         n_ex = _operators(plan, "Exchange hashpartitioning")
         assert 1 <= n_ex <= 2, plan
         assert ("Generate" in plan) == (z_min < z_max), plan
+
+
+def test_pbf_file_scans_sized_to_the_file(spark, tmp_path):
+    """A small .osm.pbf is one task per reader, as Spark's file split
+    rule would make it (the frame rows used to be sliced into one
+    Python task per core), and building a reader starts no job."""
+    from osm_spark.sources import pbf as P
+
+    blocks = [
+        P.encode_primitive_block(
+            nodes=[{"id": b * 10 + i, "lat": i, "lon": b} for i in range(5)]
+        )
+        for b in range(6)
+    ] + [
+        P.encode_primitive_block(ways=[{"id": 1, "refs": [1, 2], "tags": {}}]),
+        P.encode_primitive_block(relations=[{
+            "id": 1, "tags": {},
+            "members": [("way", 1, "outer")],
+        }]),
+    ]
+    path = tmp_path / "small.osm.pbf"
+    path.write_bytes(P.encode_pbf(blocks))
+    tracker = spark.sparkContext.statusTracker()
+    for read in (
+        P.read_pbf_file_nodes_arrow, P.read_pbf_file_ways_arrow,
+        P.read_pbf_file_relations_arrow,
+    ):
+        jobs = set(tracker.getJobIdsForGroup(None))
+        df = read(spark, str(path))
+        assert set(tracker.getJobIdsForGroup(None)) == jobs
+        assert df.rdd.getNumPartitions() == 1
+        assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_multipolygon_assembly_one_arrow_pass(spark):
+    """Members are collected per relation in the JVM and assembled in
+    one mapInArrow pass: no per-relation pandas group kernel."""
+    plan = _final_plan(Q.SPARK_QUERIES["multipolygon_assembly"](spark, SF))
+    assert len(re.findall(_PY_NODE, plan)) == 1, plan
+    assert "MapInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
