@@ -1,8 +1,10 @@
 """Benchmark harness.
 
-Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": <total sec>, "unit": "sec",
+Default mode: runs the headline queries (``QUERY_GROUPS``) at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints three lines: ``BENCH_VERBOSE
+{...}`` (every timing, count and rate), ``{"rates": {...}}``, and the
+compact final line {"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 The flagship tile pipeline additionally runs on a REPLICATED pages table
@@ -31,129 +33,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 REPLICATE = int(os.environ.get("SPARK_GRAFT_REPLICATE", "20000"))
-
-HEADLINE = [
-    "tile_assign",
-    "tile_pyramid",
-    "pip_broadcast",
-    "pip_cells",
-    "pip_cells_adaptive",
-    "pip_polygon_covering",
-    "pip_wkb",
-    "h3_assign",
-    "h3_knn",
-    "knn_kring",
-    "covering_adaptive",
-    "covering_polygon",
-    "kmeans_bigk",
-    "asof_annotate",
-    "minhash_lsh",
-    "simhash_neardup",
-    "dedup_exact",
-    "token_quality",
-    "simhash",
-    "embedding_topk",
-    "embedding_lsh_bucket",
-    "multipolygon_assembly",
-    "way_centroid",
-    "q1_pricing",
-    "media_jpeg",
-    "html_extract",
-    "quality_repetition",
-    "pii_scrub",
-    "chunk_dedup",
-    "main_content",
-    "top_terms",
-    "robots_filter",
-    "link_pagerank",
-    "bloom_seen_filter",
-    "sample_mix",
-    "pack_ctx",
-    "link_components",
-    "anchor_rollup",
-    "web_sessions",
-    "contamination_check",
-    "bpe_pair_counts",
-    "semantic_dedup",
-    "crawl_delta",
-    "substr_dedup",
-    "lm_perplexity",
-    "neardup_clusters",
-    "index_search",
-    "pq_topk",
-    "frontier_schedule",
-    "nb_classify",
-    "bm25_search",
-    "page_snapshot_at",
-    "kmv_distinct",
-    "pmi_collocations",
-    "length_quantiles",
-    "phrase_merge",
-    "tile_quantiles",
-    "segment_tiles",
-    "geohash_cell",
-    "clip_bbox",
-    "polyline_codec",
-    "simplify_dp",
-    "resample_line",
-    "tile_topk_terms",
-    "segment_bearing",
-    "tile_smooth",
-    "hll_registers",
-    "wkt_codec",
-    "mvt_encode",
-    "convex_hull",
-    "route_shortest",
-    "snap_roads",
-    "geo_cluster",
-    "geocode_extract",
-    "geodesic_area",
-    "way_crossings",
-    "xml_bz2_scan",
-    "fuzzy_contamination",
-    "hex_polyfill",
-    "hex_compact",
-    "hex_cover_join",
-    "od_matrix",
-    "stay_points",
-    "nearest_site",
-    "zonal_stats",
-    "hits_scores",
-    "countmin_heavy",
-    "embed_quantize",
-    "link_triangles",
-    "hdr_quantiles",
-    "time_weighted_avg",
-    "event_funnel",
-    "table_merge_scan",
-    "tile_coverage",
-    "tile_skew_profile",
-    "hll_pyramid",
-    "window_rollup",
-    "weighted_sample",
-    "asof_join_dim",
-    "interval_join_rollup",
-    "table_zorder_scan",
-    "kcore_filter",
-    "cdc_chunk_dedup",
-    "dsir_weights",
-    "map_match_viterbi",
-    "tile_delta_counts",
-    "url_editdist_join",
-    "label_prop_classify",
-    "quadtree_bins",
-    "embed_jl_project",
-    "bpe_apply",
-    "phrase_search",
-    "table_bloom_scan",
-    "media_gif",
-    "jaccard_exact_join",
-    "scd2_build",
-    "bot_cadence",
-    "langid_eval",
-    "link_reciprocity",
-    "vocab_coverage",
-]
 
 
 def flagship_tile_job(spark, sf_dir: str, factor: int, parallelism: int) -> int:
@@ -286,23 +165,21 @@ def _flagship_child(which: str, cpus: int) -> None:
     print(json.dumps({"which": which, "sec": round(best, 3), "pages": pages}))
 
 
-def _run_flagship_fresh(which: str, jvms: int = 3) -> tuple[float, int]:
-    """Best over ``jvms`` fresh-JVM children (each best-of-3 runs)."""
-    best = None
-    pages = 0
-    for _ in range(jvms):
+def _best_of_children(args: list[str], runs: int) -> dict:
+    """Run ``bench.py *args`` as ``runs`` fresh-JVM children and return
+    each key of their final JSON lines at its minimum over the runs
+    (timings take the best run; counts are equal in every run)."""
+    best: dict = {}
+    for _ in range(runs):
         out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--flagship-child",
-             which, str(CPUS)],
+            [sys.executable, os.path.abspath(__file__), *args],
             capture_output=True, text=True, timeout=1800,
             env={**os.environ},
         )
         line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-        r = json.loads(line)
-        pages = r["pages"]
-        if best is None or r["sec"] < best:
-            best = r["sec"]
-    return best, pages
+        for k, v in json.loads(line).items():
+            best[k] = min(best.get(k, v), v)
+    return best
 
 
 # Headline queries measure in FRESH JVM children, grouped by operator
@@ -312,6 +189,7 @@ def _run_flagship_fresh(which: str, jvms: int = 3) -> tuple[float, int]:
 # degrade varies run to run, making BENCH numbers incomparable across
 # rounds (the r01->r02 "regressions" were exactly this). Short
 # homogeneous sessions reproduce; shared-session protocol does not.
+# These groups are the headline query set, timed in this order.
 QUERY_GROUPS: list[list[str]] = [
     ["tile_assign", "tile_pyramid", "pip_broadcast", "pip_cells",
      "pip_cells_adaptive", "pip_polygon_covering", "pip_wkb"],
@@ -1185,137 +1063,33 @@ def run_default() -> None:
     group_jvms = 2
     times: dict[str, float] = {}
     for group in QUERY_GROUPS:
-        for _ in range(group_jvms):
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--queries-child",
-                 ",".join(group)],
-                capture_output=True, text=True, timeout=1800,
-                env={**os.environ},
-            )
-            line = [
-                l for l in out.stdout.strip().splitlines() if l.startswith("{")
-            ][-1]
-            for name, sec in json.loads(line).items():
-                times[name] = min(times.get(name, sec), sec)
-    times = {n: times[n] for n in HEADLINE if n in times}
+        times.update(
+            _best_of_children(["--queries-child", ",".join(group)], group_jvms)
+        )
 
-    # PBF decode rate: fresh JVM, best of 2 children (VERDICT_r03 #6 —
-    # the directly-comparable number to the reference's 13.9M el/s)
-    pbf_sec = None
-    pbf_pruned = None
-    pbf_elements = 0
-    for _ in range(2):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--pbf-child", CPUS],
-            capture_output=True, text=True, timeout=1800,
-            env={**os.environ},
-        )
-        line = [
-            l for l in out.stdout.strip().splitlines() if l.startswith("{")
-        ][-1]
-        r = json.loads(line)
-        pbf_elements = r["elements"]
-        pbf_sec = r["sec"] if pbf_sec is None or r["sec"] < pbf_sec else pbf_sec
-        pbf_pruned = (
-            r["sec_pruned"]
-            if pbf_pruned is None or r["sec_pruned"] < pbf_pruned
-            else pbf_pruned
-        )
-    times["pbf_decode"] = pbf_sec
-
-    # PBF ways/relations decode rates over the mixed planet: fresh JVM,
-    # best of 2 children (VERDICT_r04 Next #4 — the like-for-like twins
-    # of BenchmarkLondon_ways/_relations, osmpbf/README.md:97-99)
-    pbf_ways_sec = pbf_rels_sec = None
-    pbf_ways = pbf_rels = 0
-    for _ in range(2):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--pbf-wr-child",
-             CPUS],
-            capture_output=True, text=True, timeout=1800,
-            env={**os.environ},
-        )
-        line = [
-            l for l in out.stdout.strip().splitlines() if l.startswith("{")
-        ][-1]
-        r = json.loads(line)
-        pbf_ways, pbf_rels = r["ways"], r["rels"]
-        pbf_ways_sec = (
-            r["sec_ways"]
-            if pbf_ways_sec is None or r["sec_ways"] < pbf_ways_sec
-            else pbf_ways_sec
-        )
-        pbf_rels_sec = (
-            r["sec_rels"]
-            if pbf_rels_sec is None or r["sec_rels"] < pbf_rels_sec
-            else pbf_rels_sec
-        )
-    times["pbf_ways_scan"] = pbf_ways_sec
-    times["pbf_relations_scan"] = pbf_rels_sec
-
-    # WARC page-ingest rate: fresh JVM, best of 2 children (the webtext
-    # counterpart of the PBF number — container decode + text extract)
-    warc_sec = None
-    warc_extract = None
-    warc_pruned = None
-    warc_pages = 0
-    for _ in range(2):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--warc-child", CPUS],
-            capture_output=True, text=True, timeout=1800,
-            env={**os.environ},
-        )
-        line = [
-            l for l in out.stdout.strip().splitlines() if l.startswith("{")
-        ][-1]
-        r = json.loads(line)
-        warc_pages = r["pages"]
-        warc_sec = r["sec"] if warc_sec is None or r["sec"] < warc_sec else warc_sec
-        warc_extract = (
-            r["sec_extract"]
-            if warc_extract is None or r["sec_extract"] < warc_extract
-            else warc_extract
-        )
-        warc_pruned = (
-            r["sec_pruned"]
-            if warc_pruned is None or r["sec_pruned"] < warc_pruned
-            else warc_pruned
-        )
-    times["warc_decode"] = warc_sec
-
-    # Splittable bzip2 decode rate: fresh JVM, best of 2 children (the
-    # compressed-planet-ingest twin of the PBF/WARC rates)
-    bz2_blk_sec = bz2_el_sec = None
-    bz2_bytes = bz2_elements = 0
-    for _ in range(2):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--bz2-child", CPUS],
-            capture_output=True, text=True, timeout=1800,
-            env={**os.environ},
-        )
-        line = [
-            l for l in out.stdout.strip().splitlines() if l.startswith("{")
-        ][-1]
-        r = json.loads(line)
-        bz2_bytes, bz2_elements = r["bytes"], r["elements"]
-        bz2_blk_sec = (
-            r["sec_blocks"]
-            if bz2_blk_sec is None or r["sec_blocks"] < bz2_blk_sec
-            else bz2_blk_sec
-        )
-        bz2_el_sec = (
-            r["sec_elements"]
-            if bz2_el_sec is None or r["sec_elements"] < bz2_el_sec
-            else bz2_el_sec
-        )
-    times["bz2_decode"] = bz2_blk_sec
+    # PBF decode rate (VERDICT_r03 #6 — the directly-comparable number
+    # to the reference's 13.9M el/s); PBF ways/relations rates over the
+    # mixed planet (VERDICT_r04 Next #4 — the like-for-like twins of
+    # BenchmarkLondon_ways/_relations, osmpbf/README.md:97-99); WARC
+    # page-ingest rate (the webtext counterpart: container decode + text
+    # extract); splittable bzip2 decode rate (the compressed-planet
+    # ingest twin). Each is the best of 2 fresh-JVM children.
+    pbf = _best_of_children(["--pbf-child", CPUS], 2)
+    pbf_wr = _best_of_children(["--pbf-wr-child", CPUS], 2)
+    warc = _best_of_children(["--warc-child", CPUS], 2)
+    bz2 = _best_of_children(["--bz2-child", CPUS], 2)
+    times["pbf_decode"] = pbf["sec"]
+    times["pbf_ways_scan"] = pbf_wr["sec_ways"]
+    times["pbf_relations_scan"] = pbf_wr["sec_rels"]
+    times["warc_decode"] = warc["sec"]
+    times["bz2_decode"] = bz2["sec_blocks"]
 
     # flagships measure in FRESH JVMs (see _flagship_child docstring)
     flagship_jvms = 3
-    flagship_sec, n_pages = _run_flagship_fresh("tile", jvms=flagship_jvms)
-    times["flagship_tile_pipeline"] = round(flagship_sec, 3)
-    hex_sec, hex_pages = _run_flagship_fresh("hex", jvms=flagship_jvms)
-    times["flagship_hex_assign"] = round(hex_sec, 3)
+    tile = _best_of_children(["--flagship-child", "tile", CPUS], flagship_jvms)
+    times["flagship_tile_pipeline"] = round(tile["sec"], 3)
+    hexa = _best_of_children(["--flagship-child", "hex", CPUS], flagship_jvms)
+    times["flagship_hex_assign"] = round(hexa["sec"], 3)
 
     total = round(sum(times.values()), 3)
     sf = SF_DIR.rstrip("/").split("sf")[-1]
@@ -1329,17 +1103,17 @@ def run_default() -> None:
     # exceeds the cap (future query growth), per-family query lines are
     # emitted first and the final line keeps totals + rates only.
     rates = {
-        "pages_per_sec": int(n_pages / flagship_sec),
-        "pbf_elements_per_sec": int(pbf_elements / pbf_sec),
-        "pbf_pruned_elements_per_sec": int(pbf_elements / pbf_pruned),
-        "pbf_ways_per_sec": int(pbf_ways / pbf_ways_sec),
-        "pbf_relations_per_sec": int(pbf_rels / pbf_rels_sec),
-        "warc_pages_per_sec": int(warc_pages / warc_sec),
-        "warc_extract_pages_per_sec": int(warc_pages / warc_extract),
-        "warc_pruned_pages_per_sec": int(warc_pages / warc_pruned),
-        "hex_pages_per_sec": int(hex_pages / hex_sec),
-        "bz2_mb_per_sec": int(bz2_bytes / bz2_blk_sec / (1 << 20)),
-        "bz2_elements_per_sec": int(bz2_elements / bz2_el_sec),
+        "pages_per_sec": int(tile["pages"] / tile["sec"]),
+        "pbf_elements_per_sec": int(pbf["elements"] / pbf["sec"]),
+        "pbf_pruned_elements_per_sec": int(pbf["elements"] / pbf["sec_pruned"]),
+        "pbf_ways_per_sec": int(pbf_wr["ways"] / pbf_wr["sec_ways"]),
+        "pbf_relations_per_sec": int(pbf_wr["rels"] / pbf_wr["sec_rels"]),
+        "warc_pages_per_sec": int(warc["pages"] / warc["sec"]),
+        "warc_extract_pages_per_sec": int(warc["pages"] / warc["sec_extract"]),
+        "warc_pruned_pages_per_sec": int(warc["pages"] / warc["sec_pruned"]),
+        "hex_pages_per_sec": int(hexa["pages"] / hexa["sec"]),
+        "bz2_mb_per_sec": int(bz2["bytes"] / bz2["sec_blocks"] / (1 << 20)),
+        "bz2_elements_per_sec": int(bz2["elements"] / bz2["sec_elements"]),
     }
     verbose = {
         "metric": "headline_queries_total",
@@ -1348,13 +1122,13 @@ def run_default() -> None:
         "queries": times,
         "sf": float(sf),
         **rates,
-        "pbf_elements": pbf_elements,
-        "pbf_ways": pbf_ways,
-        "pbf_relations": pbf_rels,
-        "warc_pages": warc_pages,
-        "bz2_bytes": bz2_bytes,
-        "bz2_elements": bz2_elements,
-        "flagship_pages": n_pages,
+        "pbf_elements": pbf["elements"],
+        "pbf_ways": pbf_wr["ways"],
+        "pbf_relations": pbf_wr["rels"],
+        "warc_pages": warc["pages"],
+        "bz2_bytes": bz2["bytes"],
+        "bz2_elements": bz2["elements"],
+        "flagship_pages": tile["pages"],
         "cpus": int(CPUS),
         "replicate": REPLICATE,
         "protocol": f"queries best of {group_jvms} fresh JVMs"

@@ -115,13 +115,5 @@ def way_to_xml(way: Column) -> Column:
     return F.to_xml(way, {"rowTag": "way"})
 
 
-def xml_to_way(xml: Column) -> Column:
-    return F.from_xml(xml, _WAY_SCHEMA, {"rowTag": "way"})
-
-
 def relation_to_xml(rel: Column) -> Column:
     return F.to_xml(rel, {"rowTag": "relation"})
-
-
-def xml_to_relation(xml: Column) -> Column:
-    return F.from_xml(xml, _REL_SCHEMA, {"rowTag": "relation"})

@@ -147,39 +147,6 @@ def _ring_orientation_pts(pts: list[tuple[float, float]]) -> int:
     return ring_orientation(xs, ys)
 
 
-def group_segments(
-    members: list[dict], way_lines: dict[int, list[tuple[float, float]]]
-) -> tuple[list[Segment], list[Segment], bool]:
-    """mputil.Group (mputil.go:126-185): split way members into
-    outer/inner segment lists, reversing against the member orientation;
-    missing ways taint the geometry; zero-length lines are dropped.
-
-    members: [{type, ref, role, orientation}], way_lines: ref -> line.
-    """
-    outer: list[Segment] = []
-    inner: list[Segment] = []
-    tainted = False
-    for i, m in enumerate(members):
-        if m.get("type") != "way":
-            continue
-        line = way_lines.get(m["ref"])
-        if line is None:
-            tainted = True
-            continue
-        if len(line) == 0:
-            continue
-        seg = Segment(list(line), index=i, orientation=int(m.get("orientation") or 0))
-        if m.get("role") == "outer":
-            if seg.orientation == CW:
-                seg.reverse()
-            outer.append(seg)
-        elif m.get("role") == "inner":
-            if seg.orientation == CCW:
-                seg.reverse()
-            inner.append(seg)
-    return outer, inner, tainted
-
-
 def _closed(ring: list[tuple[float, float]]) -> bool:
     return len(ring) > 0 and ring[0] == ring[-1]
 

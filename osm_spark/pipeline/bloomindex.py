@@ -24,7 +24,6 @@ of the probe key against each file's bitmap, zero Spark jobs.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 from pyspark.sql import functions as F
@@ -96,13 +95,6 @@ def build_file_blooms(
            "files": blooms}
     _atomic_write_json(_sidecar_path(table, snap["id"]), out)
     return out
-
-
-def load_file_blooms(table: SnapshotTable,
-                     snap_id: int | None = None) -> dict:
-    snap = table._resolve(snap_id, None)
-    with open(_sidecar_path(table, snap["id"])) as f:
-        return json.load(f)
 
 
 def plan_point_lookup(

@@ -31,8 +31,14 @@ HOT_LON = -74.006
 HOT_MOD = 20
 
 
+DOCUMENTS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    """The ``documents`` table with its known schema, so building a
+    query starts no schema-inference job; a column missing from the
+    file reads as NULL."""
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
 
 
 def geo_lat(doc_id) -> Column:

@@ -42,16 +42,6 @@ def zorder_key(x, y) -> Column:
     return tiles.quadkey_value(x, y)
 
 
-def zorder_key_sql(x: str, y: str, bits: int = 20) -> str:
-    """DuckDB twin of :func:`zorder_key` for oracle SQL: explicit
-    per-bit form (bits per axis, default covers tile zooms <= 20)."""
-    terms = [
-        f"((({x} >> {k}) & 1) << {2 * k}) + ((({y} >> {k}) & 1) << {2 * k + 1})"
-        for k in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def cluster_by_zorder(
     df: DataFrame, xcol: str, ycol: str, n_files: int
 ) -> DataFrame:

@@ -4117,12 +4117,17 @@ def q_pbf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages encode into DenseNodes PrimitiveBlocks — hand-rolled protobuf
     varint/zigzag/packed columns, delta coding, string table, zlib
     blobs, BigEndian BlobHeader framing (decode.go:301-330,
-    osmformat.pb.go DenseNodes) — then the block-parallel Spark scan
-    (mapInPandas over the blob column, cumsum delta-undo) reads them
-    back. The oracle reproduces the 1e-7 coordinate grid closed-form
-    (granularity 100 nano-degrees, floor(x+0.5) grid rounding), so any
-    defect in varint packing, zigzag, delta chains, framing or the
-    granularity math shifts the values."""
+    osmformat.pb.go DenseNodes) — written to a .osm.pbf file that the
+    Arrow file scan (read_pbf_file_nodes_arrow: executor-side preads,
+    mapInArrow, cumsum delta-undo) reads back. The oracle reproduces
+    the 1e-7 coordinate grid closed-form (granularity 100 nano-degrees,
+    floor(x+0.5) grid rounding), so any defect in varint packing,
+    zigzag, delta chains, framing or the granularity math shifts the
+    values."""
+    import hashlib
+    import os
+    import tempfile
+
     from osm_spark.sources import pbf as P
 
     pts = pages.page_points(spark, sf_dir).select("doc_id", "lat", "lon")
@@ -4137,8 +4142,13 @@ def q_pbf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         )
-    buf = P.encode_pbf(blocks)
-    nodes = P.read_pbf_nodes(spark, buf)
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    path = os.path.join(tempfile.gettempdir(), f"osm_spark_pbf_scan_{key}.osm.pbf")
+    fd, tmp = tempfile.mkstemp(dir=tempfile.gettempdir())
+    with os.fdopen(fd, "wb") as f:
+        f.write(P.encode_pbf(blocks))
+    os.replace(tmp, path)  # atomic vs concurrent sessions
+    nodes = P.read_pbf_file_nodes_arrow(spark, path)
     return nodes.select(
         "id",
         F.floor(F.col("lat") * 1e6).cast("long").alias("lat_e6"),
@@ -11399,182 +11409,3 @@ def q_table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = part if out is None else out.unionByName(part)
     return out
-
-
-# =====================================================================
-# Driver correctness-window ordering
-# =====================================================================
-#
-# The external driver's correctness gate compares only the FIRST 50
-# entries of queries() (insertion order) against their oracles; the
-# remainder get session-level verification via scripts/check_oracle.py.
-# Registration above is grouped by operator family for readability, so
-# we re-key the registries here into an explicit order that puts the
-# newest operator generation (round-2 H3/WKB/covering/geojson-emission/
-# trained-ANN/media/corpus queries + round-3 additions) inside the
-# 50-entry window while keeping >=1 driver-checked row per family.
-# Names not present (yet) are skipped harmlessly; queries beyond the
-# window remain registered and oracle-checked locally.
-
-_DRIVER_WINDOW: list[str] = [
-    # ------------------------------------------------------------------
-    # Round-5 window.  VERDICT_r04 Next #1: every entry of the round-4
-    # _ROUND5_ROTATION_QUEUE (22 queries, all locally value-verified)
-    # rotates in; 22 round-4 driver-green rows park to _LEGACY (each
-    # family keeps >=1 in-window representative; the parked rows remain
-    # registered + oracle-checked locally).  Kept rows below, then the
-    # rotated-in tail.
-    # ------------------------------------------------------------------
-    # flagship + tile family (tile_assign, r04-green, parks for the
-    # round-5 od_matrix row; segment_tiles / tile_quantiles /
-    # tile_topk_terms / tile_smooth carry the tile math in-window and
-    # od_matrix adds the z5 assignment under driver hash)
-    "od_matrix",
-    # trajectory family (new this round, shares the tile-assignment +
-    # user-window kernels; main_content, r04-green, parks in its favor
-    # — text keeps 7+ rows in-window)
-    "stay_points",
-    # hex / spatial-knn family (h3_knn, r04-green, parks for the
-    # round-5 in-row nearest-site argmin; hex_polyfill / hex_compact /
-    # hex_cover_join keep the hex kernels in-window)
-    "nearest_site",
-    # WKB + PIP + covering family (pip_polygon_covering, r04-green,
-    # parks for the round-5 zonal rollup; zonal_stats keeps the
-    # cell-join PIP kernels in-window, hex_polyfill / hex_cover_join
-    # keep region->cells covering kernels under driver hash)
-    "zonal_stats",
-    # geojson emission family: geojson_way_features (r04-green,
-    # UNTOUCHED this round) parks for the round-5 hopping-window
-    # rollup — the window is saturated with never-attested round-5
-    # rows, and cross-round union coverage (every registered query
-    # driver-attested at least once, VERDICT_r04 Next #1's criterion)
-    # outranks re-attesting an unchanged green row
-    "window_rollup",
-    # geometry family (convex_hull / simplify_dp / resample_line /
-    # wkt_codec / mvt_encode / geodesic_area rotate in alongside;
-    # multipolygon_assembly, r04-green, parks for the round-5
-    # segment-intersection join row)
-    "way_crossings",
-    # temporal / history family (asof_annotate, r04-green, parks for
-    # the round-5 time-weighted-average row; stay_points / event_funnel
-    # keep the user-window temporal kernels in-window and the annotate
-    # cogroup kernels stay registered + locally oracle-checked)
-    "time_weighted_avg",
-    "event_funnel",
-    # ids / stats family: ids_pack_roundtrip (r04-green, UNTOUCHED
-    # this round) parks for the round-5 weighted-sampling row, same
-    # union-coverage rationale as window_rollup above
-    # (length_quantiles keeps the stats family in-window)
-    "weighted_sample",
-    # PBF wire format
-    "pbf_scan",
-    # media family (media_jpeg swapped in for round 5: its behavior
-    # CHANGED this round — odd ids now encode progressive JPEG — so it
-    # needs fresh driver attestation; media_resize and, later in the
-    # round, media_decode_real — both r04-green and untouched — park
-    # in its favor, the latter making room for hex_compact)
-    "media_jpeg",
-    "hex_compact",
-    # streaming family: replication_actions (r04-green; replication.py
-    # untouched this round) parks for the round-5 generic as-of join —
-    # union-coverage rationale, same as window_rollup
-    "asof_join_dim",
-    # osmapi family: osmapi_notes (r04-green; round-5 only added
-    # transport glue around the unchanged parse kernels) parks for the
-    # round-5 bucketed interval join
-    "interval_join_rollup",
-    "hex_cover_join",
-    # XML file source + diff codec family (diff_roundtrip, r04-green,
-    # parks to make room for the round-5 splittable-bzip2 source row)
-    # (xml_scan, r04-green, parks for the round-5 HLL-pyramid row;
-    # xml_bz2_scan routes through the same element-scan kernels, so
-    # the XML family stays under driver hash)
-    "hll_pyramid",
-    "xml_bz2_scan",
-    # snapshot-table family (table_prune_scan, r04-green, parks for
-    # the round-5 COW-merge row, which exercises append + manifest
-    # stats + carried-file planning + scan in one chain)
-    "table_merge_scan",
-    # WARC container source (warc_cdx_fetch, r04-green, parks for the
-    # round-5 hex-polyfill row; warc_scan keeps the container kernels)
-    "warc_scan",
-    "hex_polyfill",
-    # text family (main_content / index_search / bm25_search /
-    # nb_classify / semantic_dedup / neardup_clusters keep the family's
-    # dedup, retrieval, classification and boilerplate kernels under
-    # driver hash; pmi_collocations / phrase_merge rotate in alongside)
-    # (bm25_search, r04-green, parks for the round-5 cross-corpus
-    # fuzzy-decontamination row; index_search keeps the postings/top-k
-    # retrieval kernels in-window)
-    # (robots_filter, r04-green, parks for the round-5 tile-coverage
-    # rasterization row; the text family keeps fuzzy_contamination /
-    # neardup_clusters / pmi_collocations / phrase_merge in-window)
-    "tile_coverage",
-    "fuzzy_contamination",
-    # sketch family gains the Count-Min frequency grid and the HDR
-    # quantile sketch alongside hll_registers (nb_classify and
-    # index_search, both r04-green, park in their favor)
-    "countmin_heavy",
-    "hdr_quantiles",
-    # (semantic_dedup and neardup_clusters, both r04-green, park for
-    # the round-5 event_funnel + skew-profile rows; fuzzy_contamination
-    # keeps the minhash/band kernels in-window and geo_cluster /
-    # route_shortest keep the pointer-jump components kernels)
-    "tile_skew_profile",
-    # link-graph family (route_shortest rotates in alongside;
-    # link_pagerank and link_components, both r04-green, park for the
-    # round-5 HITS + degree-oriented-triangles rows — the iterative-BSP
-    # kernels stay in-window via hits_scores/route_shortest/geo_cluster)
-    "hits_scores",
-    "link_triangles",
-    # similarity family (pq_topk, r04-green, parks for the round-5
-    # int8-quantization row)
-    "embed_quantize",
-    # ------------------------------------------------------------------
-    # Round-5 rotations: the 22 queries that had zero driver rows across
-    # rounds 1-4 (exactly the round-4 _ROUND5_ROTATION_QUEUE).  Parked
-    # to make room (all r04 driver-green): interesting_nodes,
-    # notes_date_codec, point_on_surface, osc_roundtrip, html_extract,
-    # quality_repetition, pii_scrub, chunk_dedup, top_terms,
-    # bloom_seen_filter, sample_mix, pack_ctx, anchor_rollup,
-    # web_sessions, contamination_check, bpe_pair_counts, crawl_delta,
-    # substr_dedup, lm_perplexity, frontier_schedule, page_snapshot_at,
-    # kmv_distinct.  Family coverage retained: text keeps 7 rows
-    # in-window, sketches move kmv->hll, tile math gains 4 rows,
-    # geometry gains 6, graph keeps pagerank+components+route.
-    # ------------------------------------------------------------------
-    "pmi_collocations",
-    "length_quantiles",
-    "phrase_merge",
-    "tile_quantiles",
-    "segment_tiles",
-    "geohash_cell",
-    "clip_bbox",
-    "polyline_codec",
-    "simplify_dp",
-    "resample_line",
-    "tile_topk_terms",
-    "segment_bearing",
-    "tile_smooth",
-    "hll_registers",
-    "wkt_codec",
-    "mvt_encode",
-    "convex_hull",
-    "route_shortest",
-    "snap_roads",
-    "geo_cluster",
-    "geocode_extract",
-    "geodesic_area",
-]
-
-
-def _apply_registry_order() -> None:
-    global SPARK_QUERIES, ORACLE_SQL
-    window = [k for k in _DRIVER_WINDOW if k in SPARK_QUERIES]
-    rest = [k for k in SPARK_QUERIES if k not in set(window)]
-    order = window + rest
-    SPARK_QUERIES = {k: SPARK_QUERIES[k] for k in order}
-    ORACLE_SQL = {k: ORACLE_SQL[k] for k in order if k in ORACLE_SQL}
-
-
-_apply_registry_order()

@@ -26,11 +26,14 @@ is ALREADY columnar, which is exactly why it maps onto the DataFrame
 engine without a row-object detour (SURVEY §1: DenseNodes are
 delta-coded parallel arrays).
 
-Spark scan shape: the file splits into blobs on the driver (cheap —
-framing only), the blob payloads parallelize as a binary-column
-DataFrame, and each PrimitiveBlock decodes inside ``mapInPandas`` —
-the distributed analog of the reference's worker fan-out
-(decode.go:113-160, one goroutine per data blob).
+Spark scan shape: the driver walks the file's framing (cheap — seeks
+only) and splits its blobs into contiguous runs, one task each; every
+task preads its own blobs and decodes them into Arrow columns inside
+``mapInArrow``, one reader per element kind — the distributed analog
+of the reference's worker fan-out (decode.go:113-160, one goroutine per
+data blob). ``decode_primitive_block`` is the row-wise decoder: the
+fallback for plain-Node blocks and the reference the tests compare the
+Arrow decoders against.
 """
 
 from __future__ import annotations
@@ -774,18 +777,6 @@ def _check_header(payload: bytes) -> None:
         raise ValueError(f"PBF header requires unsupported features: {unsupported}")
 
 
-def _split_data_blobs(pbf_bytes: bytes) -> list[tuple[int, bytearray]]:
-    """Framing walk + header feature check over a byte string: returns
-    the OSMData blobs."""
-    blobs = []
-    for i, (t, b) in enumerate(split_blobs(pbf_bytes)):
-        if t == "OSMHeader":
-            _check_header(decompress_blob(b))
-        elif t == "OSMData":
-            blobs.append((i, bytearray(b)))
-    return blobs
-
-
 def split_count(
     total_bytes: int, max_partition_bytes: int, open_cost: int, min_partitions: int
 ) -> int:
@@ -939,8 +930,8 @@ def decode_block_nodes_arrow(
     per-node Python objects anywhere: delta chains are numpy cumsums,
     tags become a MapArray built from keys_vals zero-delimiter offsets
     + take() on the zero-copy string table, users are a take() too.
-    Feeds mapInArrow (read_pbf_file_nodes_arrow); plain-Node groups
-    fall back to the row decoder."""
+    Feeds mapInArrow (read_pbf_file_nodes_arrow). A block with any
+    plain-Node group decodes whole through ``_row_block_nodes_arrow``."""
     import pyarrow as pa
 
     strings = _string_table_arrow(payload) if (want_tags or want_info) else None
@@ -962,7 +953,7 @@ def decode_block_nodes_arrow(
     for g in groups:
         for ff, _, vv in _Reader(g).fields():
             if ff == 1:
-                raise ValueError("plain-Node group: use the row decoder")
+                return _row_block_nodes_arrow(payload, want_tags, want_info)
             if ff != 2:
                 continue
             cols: dict[int, bytes] = {}
@@ -1065,14 +1056,53 @@ def decode_block_nodes_arrow(
     return merged
 
 
+def _row_block_nodes_arrow(payload: bytes, want_tags: bool, want_info: bool):
+    """Node columns of a block that carries plain-Node groups (rare:
+    writers emit DenseNodes), decoded row-wise by decode_primitive_block
+    and typed as ``_NODE_COL_TYPES`` so they concatenate with the
+    DenseNodes chunks of decode_block_nodes_arrow."""
+    import pyarrow as pa
+
+    blk = decode_primitive_block(payload, want_tags=want_tags, want_info=want_info)
+    n = blk["nodes"]
+    if not n:
+        return None
+    cnt = len(n["id"])
+    chunk = {
+        "id": np.asarray(n["id"], dtype=np.int64),
+        "lat": np.asarray(n["lat"], dtype=np.float64),
+        "lon": np.asarray(n["lon"], dtype=np.float64),
+    }
+    if want_tags:
+        chunk["tags"] = pa.array(
+            [list(t.items()) for t in n["tags"]],
+            type=pa.map_(pa.utf8(), pa.utf8()),
+        )
+    if want_info:
+        dtypes = {"version": np.int32, "visible": bool}
+        for col, default in _NODE_INFO_DEFAULTS.items():
+            vals = n[col] if col in n else [default] * cnt
+            chunk[col] = (
+                pa.array(list(vals), type=pa.utf8()) if col == "user"
+                else np.asarray(vals, dtype=dtypes.get(col, np.int64))
+            )
+    return chunk
+
+
 def read_pbf_file_nodes_arrow(
     spark, path: str, columns=("id", "lat", "lon")
 ):
-    """Arrow-native file scan: like read_pbf_file_nodes but every task
-    yields pyarrow RecordBatches straight from the vectorized decoder
-    (mapInArrow) — no pandas, no per-node Python objects. Requires
-    DenseNodes-only blocks (the planet shape); plain-Node groups raise
-    (scan those files with read_pbf_file_nodes)."""
+    """Node scan over a .osm.pbf FILE: the driver walks the framing by
+    seeks, checks the OSMHeader features and splits the blobs into
+    Spark-file-split-sized runs (``_file_partitions``); every task
+    preads its own blobs and yields pyarrow RecordBatches from
+    decode_block_nodes_arrow (mapInArrow) — no pandas, no per-node
+    Python objects on DenseNodes blocks. Blocks with plain-Node groups
+    take the row-decoded fallback, with the same column types.
+
+    ``columns`` projects the output AND prunes the decode (the
+    reference scanner's skip-flag semantics): tags/DenseInfo only
+    parse when a column needs them."""
     info_cols = ("version", "timestamp", "changeset", "uid", "user", "visible")
     want_tags = "tags" in columns
     want_info = any(c in columns for c in info_cols)
@@ -1696,218 +1726,3 @@ def walk_frames(path: str) -> list[tuple[str, int, int]]:
             frames.append((btype, off, datasize))
             f.seek(datasize, 1)
     return frames
-
-
-def read_pbf_file_nodes(
-    spark, path: str, columns=("id", "lat", "lon")
-):
-    """Node scan over a .osm.pbf FILE — the 100 TB shape: the driver
-    walks framing with seeks (offsets only), validates the OSMHeader
-    feature set, and splits the blobs into Spark-file-split-sized runs
-    (``_file_partitions``); every executor preads and decodes its own
-    blobs. Nothing but frame coordinates ever crosses the driver
-    (read_pbf_nodes ships the whole byte string — fine for replication
-    diffs, wrong for a planet file)."""
-    import pandas as pd
-    from pyspark.sql.types import _parse_datatype_string
-
-    bad = [c for c in columns if c not in _NODE_COL_TYPES]
-    if bad:
-        raise ValueError(f"unknown node columns {bad}")
-    want_tags = "tags" in columns
-    info_cols = ("version", "timestamp", "changeset", "uid", "user", "visible")
-    want_info = any(c in columns for c in info_cols)
-
-    df, blobs = _file_partitions(spark, path)
-    out_schema = _parse_datatype_string(
-        "struct<" + ",".join(f"{c}:{_NODE_COL_TYPES[c]}" for c in columns) + ">"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for payload in blobs(pdf["id"].tolist()):
-                blk = decode_primitive_block(
-                    payload, want_tags=want_tags, want_info=want_info
-                )
-                n = blk["nodes"]
-                if n:
-                    cnt = len(n["id"])
-                    data = {}
-                    for c in columns:
-                        if c in n:
-                            data[c] = n[c]
-                        else:
-                            data[c] = [_NODE_INFO_DEFAULTS[c]] * cnt
-                    rows.append(pd.DataFrame(data))
-            yield (
-                pd.concat(rows, ignore_index=True)
-                if rows
-                else pd.DataFrame({c: [] for c in columns})
-            )
-
-    return df.mapInPandas(gen, schema=out_schema)
-
-
-def read_pbf_nodes(spark, pbf_bytes: bytes, columns=("id", "lat", "lon")):
-    """Block-parallel node scan: framing split on the driver (cheap),
-    blob payloads parallelized as a binary column, PrimitiveBlocks
-    decoded in mapInPandas — the reference's per-blob worker fan-out
-    (decode.go:113-160) as a DataFrame.
-
-    ``columns`` projects the output AND prunes the decode (the
-    reference scanner's skip-flag semantics): tags/DenseInfo only
-    parse when a column needs them."""
-    import pandas as pd
-    from pyspark.sql.types import _parse_datatype_string
-
-    bad = [c for c in columns if c not in _NODE_COL_TYPES]
-    if bad:
-        raise ValueError(f"unknown node columns {bad}")
-    want_tags = "tags" in columns
-    info_cols = ("version", "timestamp", "changeset", "uid", "user", "visible")
-    want_info = any(c in columns for c in info_cols)
-
-    blobs = _split_data_blobs(pbf_bytes)
-    df = spark.createDataFrame(blobs, "blob_idx long, blob binary")
-    out_schema = _parse_datatype_string(
-        "struct<" + ",".join(f"{c}:{_NODE_COL_TYPES[c]}" for c in columns) + ">"
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for b in pdf["blob"]:
-                blk = decode_primitive_block(
-                    decompress_blob(bytes(b)),
-                    want_tags=want_tags,
-                    want_info=want_info,
-                )
-                n = blk["nodes"]
-                if n:
-                    cnt = len(n["id"])
-                    data = {}
-                    for c in columns:
-                        if c in n:
-                            data[c] = n[c]
-                        else:  # block without DenseInfo: defaults
-                            data[c] = [_NODE_INFO_DEFAULTS[c]] * cnt
-                    rows.append(pd.DataFrame(data))
-            yield (
-                pd.concat(rows, ignore_index=True)
-                if rows
-                else pd.DataFrame({c: [] for c in columns})
-            )
-
-    return df.mapInPandas(gen, schema=out_schema)
-
-
-def _read_pbf_groups(spark, pbf_bytes: bytes, kind: str, out_schema, to_rows):
-    import pandas as pd
-
-    blobs = _split_data_blobs(pbf_bytes)
-    df = spark.createDataFrame(blobs, "blob_idx long, blob binary")
-    empty = {f.name: [] for f in out_schema.fields}
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for b in pdf["blob"]:
-                blk = decode_primitive_block(decompress_blob(bytes(b)))
-                rows.extend(to_rows(blk[kind]))
-            # skip batches with no elements of this kind: an empty
-            # pd.DataFrame defaults object columns to float64, which
-            # Arrow cannot cast to array/map output types (hit on
-            # mixed node+way+relation files)
-            if rows:
-                yield pd.DataFrame(rows, columns=list(empty))
-
-    return df.mapInPandas(gen, schema=out_schema)
-
-
-def _read_pbf_file_groups(spark, path: str, kind: str, out_schema, to_rows):
-    """File-based twin of _read_pbf_groups: the same file split and
-    executor-side preads as read_pbf_file_nodes."""
-    import pandas as pd
-
-    df, blobs = _file_partitions(spark, path)
-    empty = {f.name: [] for f in out_schema.fields}
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for payload in blobs(pdf["id"].tolist()):
-                rows.extend(to_rows(decode_primitive_block(payload)[kind]))
-            # see _read_pbf_groups: never yield an empty DataFrame —
-            # float64-defaulted columns break the Arrow cast
-            if rows:
-                yield pd.DataFrame(rows, columns=list(empty))
-
-    return df.mapInPandas(gen, schema=out_schema)
-
-
-def _way_schema_and_rows():
-    from pyspark.sql.types import (
-        ArrayType, LongType, MapType, StringType, StructField, StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("refs", ArrayType(LongType())),
-            StructField("tags", MapType(StringType(), StringType())),
-        ]
-    )
-    return schema, lambda ws: [
-        {"id": w["id"], "refs": w.get("refs", []), "tags": w["tags"]}
-        for w in ws
-    ]
-
-
-def read_pbf_ways(spark, pbf_bytes: bytes):
-    """Block-parallel way scan -> (id, refs array<long>, tags)."""
-    schema, to_rows = _way_schema_and_rows()
-    return _read_pbf_groups(spark, pbf_bytes, "ways", schema, to_rows)
-
-
-def read_pbf_file_ways(spark, path: str):
-    """Way scan over a .osm.pbf file (executor-side preads)."""
-    schema, to_rows = _way_schema_and_rows()
-    return _read_pbf_file_groups(spark, path, "ways", schema, to_rows)
-
-
-def _relation_schema_and_rows():
-    from pyspark.sql.types import (
-        ArrayType, LongType, MapType, StringType, StructField, StructType,
-    )
-
-    member = StructType(
-        [
-            StructField("type", StringType()),
-            StructField("ref", LongType()),
-            StructField("role", StringType()),
-        ]
-    )
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("members", ArrayType(member)),
-            StructField("tags", MapType(StringType(), StringType())),
-        ]
-    )
-    return schema, lambda rs: [
-        {"id": r["id"], "members": r.get("members", []), "tags": r["tags"]}
-        for r in rs
-    ]
-
-
-def read_pbf_relations(spark, pbf_bytes: bytes):
-    """Block-parallel relation scan -> (id, members, tags)."""
-    schema, to_rows = _relation_schema_and_rows()
-    return _read_pbf_groups(spark, pbf_bytes, "relations", schema, to_rows)
-
-
-def read_pbf_file_relations(spark, path: str):
-    """Relation scan over a .osm.pbf file (executor-side preads)."""
-    schema, to_rows = _relation_schema_and_rows()
-    return _read_pbf_file_groups(spark, path, "relations", schema, to_rows)

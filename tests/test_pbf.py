@@ -1,6 +1,7 @@
 """PBF wire format: protobuf varint/zigzag/packed layer, DenseNodes
 delta columns + DenseInfo, way/relation groups, string table, zlib
-blobs, BigEndian framing, and the block-parallel Spark scan."""
+blobs, BigEndian framing, and the block-parallel Arrow file scans,
+checked against the row decoder (decode_primitive_block)."""
 
 from osm_spark.sources import pbf as P
 
@@ -24,6 +25,37 @@ RELS = [
     {"id": 4, "members": [("node", 100, "outer"), ("way", 9, "")],
      "tags": {"type": "multipolygon"}},
 ]
+
+
+NODE_COLS = ("id", "lat", "lon", "tags", "version", "timestamp",
+             "changeset", "uid", "user", "visible")
+
+
+def _node_row(vals) -> tuple:
+    """One node as a comparable tuple in NODE_COLS order."""
+    nid, lat, lon, tags, version, ts, cs, uid, user, visible = vals
+    return (int(nid), float(lat), float(lon), dict(tags or {}), int(version),
+            int(ts), int(cs), int(uid), str(user), bool(visible))
+
+
+def _oracle_nodes(data: bytes) -> list[tuple]:
+    """Every node of a PBF byte string as decoded by the row decoder
+    (decode_primitive_block), reference Info defaults filled in."""
+    rows = []
+    for btype, blob in P.split_blobs(data):
+        if btype != "OSMData":
+            continue
+        n = P.decode_primitive_block(P.decompress_blob(blob))["nodes"]
+        for i in range(len(n["id"]) if n else 0):
+            rows.append(_node_row([
+                n[c][i] if c in n else P._NODE_INFO_DEFAULTS[c]
+                for c in NODE_COLS
+            ]))
+    return sorted(rows)
+
+
+def _spark_nodes(df) -> list[tuple]:
+    return sorted(_node_row([r[c] for c in NODE_COLS]) for r in df.collect())
 
 
 def test_pbf_full_roundtrip():
@@ -71,8 +103,8 @@ def test_pbf_zigzag_and_delta_edges():
     assert n["tags"] == [{}, {}, {}]
 
 
-def test_pbf_spark_scan(spark):
-    """Block-parallel mapInPandas scan over multiple OSMData blobs."""
+def test_pbf_spark_scan(spark, tmp_path):
+    """Block-parallel Arrow file scan over multiple OSMData blobs."""
     blocks = [
         P.encode_primitive_block(
             nodes=[
@@ -82,20 +114,22 @@ def test_pbf_spark_scan(spark):
         )
         for b in range(4)
     ]
-    df = P.read_pbf_nodes(spark, P.encode_pbf(blocks))
+    path = tmp_path / "four.osm.pbf"
+    path.write_bytes(P.encode_pbf(blocks))
+    df = P.read_pbf_file_nodes_arrow(spark, str(path))
     rows = {r.id: r for r in df.collect()}
     assert len(rows) == 40
     assert abs(rows[205].lat - (2 + 5 * 0.001)) < 5e-8
 
 
-def test_pbf_spark_way_relation_scan(spark):
-    blk = P.encode_primitive_block(NODES, WAYS, RELS)
-    buf = P.encode_pbf([blk])
-    ways = {r.id: r for r in P.read_pbf_ways(spark, buf).collect()}
+def test_pbf_spark_way_relation_scan(spark, tmp_path):
+    path = tmp_path / "nwr.osm.pbf"
+    path.write_bytes(P.encode_pbf([P.encode_primitive_block(NODES, WAYS, RELS)]))
+    ways = {r.id: r for r in P.read_pbf_file_ways_arrow(spark, str(path)).collect()}
     assert list(ways[9].refs) == [100, 205, 50]
     assert ways[9].tags == {"highway": "primary"}
     assert list(ways[10].refs) == [50, 100]
-    rels = P.read_pbf_relations(spark, buf).collect()
+    rels = P.read_pbf_file_relations_arrow(spark, str(path)).collect()
     assert len(rels) == 1
     assert [(m["type"], m["ref"], m["role"]) for m in rels[0].members] == [
         ("node", 100, "outer"), ("way", 9, ""),
@@ -159,8 +193,7 @@ def test_pbf_mixed_plain_and_dense_groups():
 
 def test_pbf_scan_rejects_unsupported_required_feature(spark, tmp_path):
     """Reference scanner aborts on unknown required_features
-    (decode.go); the Spark scans must too — byte-string and file
-    readers, scalar and Arrow alike."""
+    (decode.go); every Spark file reader must too."""
     import pytest
 
     feats = ["OsmSchema-V0.6", "DenseNodes", "Sort.Type_then_ID_v2"]
@@ -168,14 +201,9 @@ def test_pbf_scan_rejects_unsupported_required_feature(spark, tmp_path):
     buf = P._framed("OSMHeader", P._blob(header)) + P._framed(
         "OSMData", P._blob(P.encode_primitive_block(NODES))
     )
-    with pytest.raises(ValueError, match="Sort.Type_then_ID_v2"):
-        P.read_pbf_nodes(spark, bytes(buf))
-    with pytest.raises(ValueError):
-        P.read_pbf_ways(spark, bytes(buf))
     path = tmp_path / "unsupported.osm.pbf"
     path.write_bytes(bytes(buf))
     for read in (
-        P.read_pbf_file_nodes, P.read_pbf_file_ways, P.read_pbf_file_relations,
         P.read_pbf_file_nodes_arrow, P.read_pbf_file_ways_arrow,
         P.read_pbf_file_relations_arrow,
     ):
@@ -229,38 +257,56 @@ def test_file_scan_partitions_follow_conf(spark, tmp_path):
     try:
         spark.conf.set(keys[0], "300")
         spark.conf.set(keys[1], "1")
-        for read in (P.read_pbf_file_nodes_arrow, P.read_pbf_file_nodes):
-            df = read(spark, str(path), columns=("id",))
-            assert 1 < df.rdd.getNumPartitions() <= 6
-            got = df.select("id", F.spark_partition_id().alias("part")).collect()
-            assert [r.id for r in got] == want
-            # contiguous runs of blocks, spread over more than one task
-            parts = [r.part for r in got]
-            assert parts == sorted(parts) and len(set(parts)) > 1
+        df = P.read_pbf_file_nodes_arrow(spark, str(path), columns=("id",))
+        assert 1 < df.rdd.getNumPartitions() <= 6
+        got = df.select("id", F.spark_partition_id().alias("part")).collect()
+        assert [r.id for r in got] == want
+        # contiguous runs of blocks, spread over more than one task
+        parts = [r.part for r in got]
+        assert parts == sorted(parts) and len(set(parts)) > 1
     finally:
         for k, v in zip(keys, old):
             spark.conf.set(k, v)
 
 
-def test_pbf_spark_scan_multigroup_blocks(spark):
-    """Block-parallel scan over blocks that each carry 2 DenseNodes
-    groups + 1 plain group: every node survives."""
+def test_pbf_spark_scan_multigroup_blocks(spark, tmp_path):
+    """Arrow file scan over blocks that each carry 2 DenseNodes groups
+    + 1 plain group: every node survives on every column, tags as a
+    map, Info defaults where a node has none, identical to the row
+    decoder."""
     blocks = [
         P.encode_primitive_block(
             nodes=[
-                {"id": b * 100 + i, "lat": b + i * 0.001, "lon": -b - i * 0.002}
+                {"id": b * 100 + i, "lat": b + i * 0.001, "lon": -b - i * 0.002,
+                 "tags": {"n": str(i)} if i % 3 == 0 else {}}
                 for i in range(10)
             ],
             dense_chunks=2,
-            plain_nodes=[{"id": b * 100 + 50, "lat": b + 0.5, "lon": -b - 0.5}],
+            plain_nodes=[{
+                "id": b * 100 + 50, "lat": b + 0.5, "lon": -b - 0.5,
+                "tags": {"amenity": "cafe", "b": str(b)},
+                **({"version": 3, "timestamp": 1_700_000_300, "changeset": 9,
+                    "uid": 4, "user": "p", "visible": False} if b == 1 else {}),
+            }],
         )
         for b in range(3)
     ]
-    df = P.read_pbf_nodes(spark, P.encode_pbf(blocks))
-    rows = {r.id: r for r in df.collect()}
-    assert len(rows) == 33
-    assert abs(rows[150].lat - 1.5) < 5e-8
-    assert abs(rows[205].lat - (2 + 5 * 0.001)) < 5e-8
+    data = P.encode_pbf(blocks)
+    path = tmp_path / "multigroup.osm.pbf"
+    path.write_bytes(data)
+    got = _spark_nodes(P.read_pbf_file_nodes_arrow(spark, str(path), columns=NODE_COLS))
+    assert len(got) == 33
+    assert got == _oracle_nodes(data)
+    rows = {r[0]: dict(zip(NODE_COLS, r)) for r in got}
+    assert abs(rows[150]["lat"] - 1.5) < 5e-8
+    assert abs(rows[205]["lat"] - (2 + 5 * 0.001)) < 5e-8
+    assert rows[250]["tags"] == {"amenity": "cafe", "b": "2"}
+    assert rows[203]["tags"] == {"n": "3"} and rows[204]["tags"] == {}
+    assert (rows[150]["version"], rows[150]["user"], rows[150]["visible"]) == (
+        3, "p", False,
+    )
+    for nid in (50, 205):  # no Info: reference defaults
+        assert [rows[nid][c] for c in NODE_COLS[4:]] == [0, 0, 0, 0, "", True]
 
 
 def test_unpack_varints_vectorized_matches_scalar():
@@ -296,13 +342,10 @@ def test_unpack_varints_vectorized_matches_scalar():
 
 
 def test_file_scan_and_column_pruning(spark, tmp_path):
-    """read_pbf_file_nodes: framing walk by seeks, executor-side pread,
-    column projection pushed into the decode; identical rows to the
-    in-memory scan."""
-    from osm_spark.sources.pbf import (
-        encode_pbf, encode_primitive_block, read_pbf_file_nodes,
-        read_pbf_nodes, walk_frames,
-    )
+    """read_pbf_file_nodes_arrow: framing walk by seeks, executor-side
+    pread, column projection pushed into the decode; identical rows to
+    the row decoder over the same blobs."""
+    import pytest
 
     nodes = [
         {
@@ -314,60 +357,40 @@ def test_file_scan_and_column_pruning(spark, tmp_path):
         for i in range(50)
     ]
     blocks = [
-        encode_primitive_block(nodes=nodes[:30]),
-        encode_primitive_block(nodes=nodes[30:]),
+        P.encode_primitive_block(nodes=nodes[:30]),
+        P.encode_primitive_block(nodes=nodes[30:]),
     ]
-    data = encode_pbf(blocks)
+    data = P.encode_pbf(blocks)
     p = tmp_path / "mini.osm.pbf"
     p.write_bytes(data)
 
-    frames = walk_frames(str(p))
+    frames = P.walk_frames(str(p))
     assert [t for t, _, _ in frames] == ["OSMHeader", "OSMData", "OSMData"]
 
-    cols = ("id", "lat", "lon", "tags", "version", "timestamp",
-            "changeset", "uid", "user", "visible")
-    got = sorted(
-        read_pbf_file_nodes(spark, str(p), columns=cols).collect(),
-        key=lambda r: r.id,
-    )
-    assert len(got) == 50
-    r9 = got[9]
-    assert (r9.id, r9.version, r9.changeset, r9.uid, r9.user) == (
+    df = P.read_pbf_file_nodes_arrow(spark, str(p), columns=NODE_COLS)
+    got = _spark_nodes(df)
+    assert got == _oracle_nodes(data)
+    r9 = dict(zip(NODE_COLS, got[9]))
+    assert [r9[c] for c in ("id", "version", "changeset", "uid", "user")] == [
         45, 2, 109, 16, "u4",
-    )
-    assert dict(r9.tags) == {"k": "v9"}
-    assert dict(got[10].tags) == {}
-    assert got[10].visible is True
+    ]
+    assert r9["tags"] == {"k": "v9"}
+    assert got[10][3] == {} and got[10][9] is True
 
     # pruned projection: same ids, no tags/info decode
     pruned = sorted(
-        read_pbf_file_nodes(spark, str(p)).collect(), key=lambda r: r.id
+        P.read_pbf_file_nodes_arrow(spark, str(p)).collect(), key=lambda r: r.id
     )
-    assert [r.id for r in pruned] == [r.id for r in got]
+    assert [(r.id, r.lat, r.lon) for r in pruned] == [g[:3] for g in got]
     assert pruned[0].__fields__ == ["id", "lat", "lon"]
 
-    # in-memory scan agrees
-    mem = sorted(
-        read_pbf_nodes(spark, data, columns=cols).collect(),
-        key=lambda r: r.id,
-    )
-    assert [
-        (r.id, r.lat, r.lon, r.version, r.user) for r in mem
-    ] == [(r.id, r.lat, r.lon, r.version, r.user) for r in got]
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="unknown node columns"):
-        read_pbf_file_nodes(spark, str(p), columns=("id", "nope"))
+    with pytest.raises(ValueError, match="unknown columns"):
+        P.read_pbf_file_nodes_arrow(spark, str(p), columns=("id", "nope"))
 
 
 def test_file_scan_ways_relations(spark, tmp_path):
-    from osm_spark.sources.pbf import (
-        encode_pbf, encode_primitive_block, read_pbf_file_relations,
-        read_pbf_file_ways,
-    )
-
     blocks = [
-        encode_primitive_block(
+        P.encode_primitive_block(
             ways=[
                 {"id": 7, "refs": [1, 2, 3], "tags": {"highway": "a"}},
                 {"id": 8, "refs": [3, 1]},
@@ -382,12 +405,12 @@ def test_file_scan_ways_relations(spark, tmp_path):
         )
     ]
     p = tmp_path / "wr.osm.pbf"
-    p.write_bytes(encode_pbf(blocks))
+    p.write_bytes(P.encode_pbf(blocks))
 
-    ws = {r.id: r for r in read_pbf_file_ways(spark, str(p)).collect()}
+    ws = {r.id: r for r in P.read_pbf_file_ways_arrow(spark, str(p)).collect()}
     assert list(ws[7].refs) == [1, 2, 3] and dict(ws[7].tags) == {"highway": "a"}
     assert list(ws[8].refs) == [3, 1]
-    rel = read_pbf_file_relations(spark, str(p)).collect()[0]
+    rel = P.read_pbf_file_relations_arrow(spark, str(p)).collect()[0]
     assert rel.id == 9
     assert [(m["type"], m["ref"], m["role"]) for m in rel.members] == [
         ("way", 7, "outer"), ("node", 1, ""),
@@ -396,13 +419,10 @@ def test_file_scan_ways_relations(spark, tmp_path):
 
 def test_arrow_scan_matches_row_scan(spark, tmp_path):
     """The Arrow-native scan (decode_block_nodes_arrow + mapInArrow)
-    is row-identical to the pandas-path scan on every column incl.
-    tags maps and DenseInfo, with and without projection."""
-    from osm_spark.sources.pbf import (
-        encode_pbf, encode_primitive_block, read_pbf_file_nodes,
-        read_pbf_file_nodes_arrow,
-    )
-
+    is row-identical to the row decoder (decode_primitive_block) on
+    every column incl. tags maps and DenseInfo, with and without
+    projection, with a plain-Node block in the same task as DenseNodes
+    blocks."""
     nodes = [
         {
             "id": i * 3 + 1, "lat": i * 0.25 - 10.0, "lon": 5.0 - i * 0.5,
@@ -412,52 +432,57 @@ def test_arrow_scan_matches_row_scan(spark, tmp_path):
         }
         for i in range(200)
     ]
-    blocks = [
-        encode_primitive_block(nodes=nodes[:120], dense_chunks=2),
-        encode_primitive_block(nodes=nodes[120:]),
+    plain = [
+        {"id": 10_000 + i, "lat": 0.125 * i, "lon": -0.5 * i,
+         "tags": {"k": str(i)} if i % 2 else {},
+         **({"version": 2, "timestamp": 1_460_000_000, "changeset": 7,
+             "uid": 3, "user": "pn"} if i % 3 else {})}
+        for i in range(6)
     ]
+    blocks = [
+        P.encode_primitive_block(nodes=nodes[:120], dense_chunks=2),
+        P.encode_primitive_block(plain_nodes=plain),
+        P.encode_primitive_block(nodes=nodes[120:]),
+    ]
+    data = P.encode_pbf(blocks)
     p = tmp_path / "arrow.osm.pbf"
-    p.write_bytes(encode_pbf(blocks))
+    p.write_bytes(data)
 
-    cols = ("id", "lat", "lon", "tags", "version", "timestamp",
-            "changeset", "uid", "user", "visible")
-    key = lambda r: r.id
-    a = sorted(read_pbf_file_nodes_arrow(spark, str(p), columns=cols).collect(), key=key)
-    b = sorted(read_pbf_file_nodes(spark, str(p), columns=cols).collect(), key=key)
-    assert len(a) == 200
-    for ra, rb in zip(a, b):
-        assert ra.id == rb.id and ra.lat == rb.lat and ra.lon == rb.lon
-        assert dict(ra.tags) == dict(rb.tags)
-        assert (ra.version, ra.timestamp, ra.changeset, ra.uid,
-                ra.user, ra.visible) == (
-            rb.version, rb.timestamp, rb.changeset, rb.uid,
-            rb.user, rb.visible,
-        )
+    a = _spark_nodes(P.read_pbf_file_nodes_arrow(spark, str(p), columns=NODE_COLS))
+    assert len(a) == 206
+    assert a == _oracle_nodes(data)
 
-    ap = sorted(read_pbf_file_nodes_arrow(spark, str(p)).collect(), key=key)
+    ap = sorted(P.read_pbf_file_nodes_arrow(spark, str(p)).collect(),
+                key=lambda r: r.id)
     assert ap[0].__fields__ == ["id", "lat", "lon"]
-    assert [r.id for r in ap] == [r.id for r in a]
+    assert [(r.id, r.lat, r.lon) for r in ap] == [r[:3] for r in a]
+    # projections that need only tags, or only one Info column, on both
+    # block shapes
+    for cols in (("id", "tags"), ("id", "user")):
+        got = sorted(
+            tuple(r) for r in P.read_pbf_file_nodes_arrow(
+                spark, str(p), columns=cols
+            ).collect()
+        )
+        idx = [NODE_COLS.index(c) for c in cols]
+        want = [tuple(r[i] for i in idx) for r in a]
+        assert [(g[0], dict(g[1]) if cols[1] == "tags" else g[1])
+                for g in got] == want
 
     # blocks without DenseInfo fill reference defaults, same as row path
     bare = [{"id": 5, "lat": 0.5, "lon": 0.25}]
     p2 = tmp_path / "bare.osm.pbf"
-    p2.write_bytes(encode_pbf([encode_primitive_block(nodes=bare)]))
-    r = read_pbf_file_nodes_arrow(spark, str(p2), columns=cols).collect()[0]
+    p2.write_bytes(P.encode_pbf([P.encode_primitive_block(nodes=bare)]))
+    r = P.read_pbf_file_nodes_arrow(spark, str(p2), columns=NODE_COLS).collect()[0]
     assert (r.version, r.user, r.visible, dict(r.tags)) == (0, "", True, {})
 
 
 def test_arrow_way_relation_scan_matches_row_scan(spark, tmp_path):
     """The Arrow-native way/relation scans decode a MIXED file (node +
-    way + relation blocks) identically to the row readers, carry the
-    Info submessage the reference parses in scanWays/scanRelations
-    (osmpbf/decode_data.go:505-712), skip foreign groups undecoded,
-    and honor column projection."""
-    from osm_spark.sources.pbf import (
-        encode_pbf, encode_primitive_block, read_pbf_file_nodes_arrow,
-        read_pbf_file_relations, read_pbf_file_relations_arrow,
-        read_pbf_file_ways, read_pbf_file_ways_arrow,
-    )
-
+    way + relation blocks) identically to the row decoder
+    (decode_primitive_block), carry the Info submessage the reference
+    parses in scanWays/scanRelations (osmpbf/decode_data.go:505-712),
+    skip foreign groups undecoded, and honor column projection."""
     ways = [
         {
             "id": 100 + i, "refs": [i * 7, i * 7 + 5, i * 7 + 9],
@@ -484,39 +509,43 @@ def test_arrow_way_relation_scan_matches_row_scan(spark, tmp_path):
     ]
     nodes = [{"id": i, "lat": 1.0 + i * 1e-4, "lon": 2.0} for i in range(80)]
     blocks = [
-        encode_primitive_block(nodes=nodes),
-        encode_primitive_block(ways=ways[:40]),
-        encode_primitive_block(relations=rels[:20]),
-        encode_primitive_block(ways=ways[40:], relations=rels[20:]),
+        P.encode_primitive_block(nodes=nodes),
+        P.encode_primitive_block(ways=ways[:40]),
+        P.encode_primitive_block(relations=rels[:20]),
+        P.encode_primitive_block(ways=ways[40:], relations=rels[20:]),
     ]
+    data = P.encode_pbf(blocks)
     p = tmp_path / "mixed.osm.pbf"
-    p.write_bytes(encode_pbf(blocks))
+    p.write_bytes(data)
+    row_blocks = [
+        P.decode_primitive_block(P.decompress_blob(b))
+        for t, b in P.split_blobs(data) if t == "OSMData"
+    ]
+    info = ("version", "timestamp", "changeset", "uid", "user", "visible")
 
-    wcols = ("id", "refs", "tags", "version", "timestamp", "changeset",
-             "uid", "user", "visible")
+    wcols = ("id", "refs", "tags") + info
     aw = sorted(
-        read_pbf_file_ways_arrow(spark, str(p), columns=wcols).collect(),
+        P.read_pbf_file_ways_arrow(spark, str(p), columns=wcols).collect(),
         key=lambda r: r.id,
     )
     assert len(aw) == 60
     for r, w in zip(aw, sorted(ways, key=lambda w: w["id"])):
         assert r.id == w["id"] and list(r.refs) == w["refs"]
         assert dict(r.tags) == w["tags"]
-        assert (r.version, r.timestamp, r.changeset, r.uid, r.user,
-                r.visible) == (
-            w["version"], w["timestamp"], w["changeset"], w["uid"],
-            w["user"], w["visible"],
-        )
-    # row reader agrees on its own (id, refs, tags) schema
-    bw = sorted(read_pbf_file_ways(spark, str(p)).collect(),
-                key=lambda r: r.id)
-    assert [(r.id, list(r.refs), dict(r.tags)) for r in bw] == [
-        (r.id, list(r.refs), dict(r.tags)) for r in aw
+        assert tuple(getattr(r, c) for c in info) == tuple(w[c] for c in info)
+    # the row decoder agrees on every column
+    row_ways = sorted(
+        (w for blk in row_blocks for w in blk["ways"]), key=lambda w: w["id"]
+    )
+    assert [(r.id, list(r.refs), dict(r.tags)) + tuple(getattr(r, c) for c in info)
+            for r in aw] == [
+        (w["id"], w["refs"], w["tags"]) + tuple(w[c] for c in info)
+        for w in row_ways
     ]
 
     rcols = ("id", "members", "tags", "version", "user")
     ar = sorted(
-        read_pbf_file_relations_arrow(spark, str(p), columns=rcols).collect(),
+        P.read_pbf_file_relations_arrow(spark, str(p), columns=rcols).collect(),
         key=lambda r: r.id,
     )
     assert len(ar) == 25
@@ -525,22 +554,31 @@ def test_arrow_way_relation_scan_matches_row_scan(spark, tmp_path):
         assert [(m["type"], m["ref"], m["role"]) for m in r.members] == [
             tuple(m) for m in x["members"]
         ]
-    br = sorted(read_pbf_file_relations(spark, str(p)).collect(),
-                key=lambda r: r.id)
-    assert [r.id for r in br] == [r.id for r in ar]
+    row_rels = sorted(
+        (x for blk in row_blocks for x in blk["relations"]),
+        key=lambda x: x["id"],
+    )
+    assert [
+        (r.id, [(m["type"], m["ref"], m["role"]) for m in r.members],
+         dict(r.tags), r.version, r.user)
+        for r in ar
+    ] == [
+        (x["id"], x["members"], x["tags"], x["version"], x["user"])
+        for x in row_rels
+    ]
 
     # projection: pruned scans decode only the asked-for columns
-    pruned = read_pbf_file_ways_arrow(spark, str(p), columns=("id", "refs"))
+    pruned = P.read_pbf_file_ways_arrow(spark, str(p), columns=("id", "refs"))
     assert pruned.columns == ["id", "refs"] and pruned.count() == 60
     # the nodes Arrow scan skips the way/relation groups in this file
-    assert read_pbf_file_nodes_arrow(spark, str(p)).count() == 80
+    assert P.read_pbf_file_nodes_arrow(spark, str(p)).count() == 80
 
     # ways without Info fill reference defaults on the Arrow path
     p2 = tmp_path / "noinfo.osm.pbf"
-    p2.write_bytes(encode_pbf([
-        encode_primitive_block(ways=[{"id": 3, "refs": [1, 2]}]),
+    p2.write_bytes(P.encode_pbf([
+        P.encode_primitive_block(ways=[{"id": 3, "refs": [1, 2]}]),
     ]))
-    r = read_pbf_file_ways_arrow(spark, str(p2), columns=wcols).collect()[0]
+    r = P.read_pbf_file_ways_arrow(spark, str(p2), columns=wcols).collect()[0]
     assert (r.version, r.user, r.visible, dict(r.tags), list(r.refs)) == (
         0, "", True, {}, [1, 2],
     )

@@ -1,10 +1,10 @@
-"""Driver-window rotation discipline + oracle-harness strictness.
+"""Driver-window order + oracle-harness strictness.
 
-Round-3 verdict items #2 and #8: (a) new queries must not silently land
-outside the driver's 50-entry correctness window; (b) the local oracle
-harness must be at least as strict as the driver's value hash (which
-renders values, so `26.0` != `26` — float-vs-int splits fail — while
-integer widths are tolerated).
+(a) The driver's 50-entry correctness window is computed from the
+attestation ledger, so no query can sit outside it unattested; (b) the
+local oracle harness must be at least as strict as the driver's value
+hash (which renders values, so `26.0` != `26` — float-vs-int splits
+fail — while integer widths are tolerated).
 """
 
 from __future__ import annotations
@@ -17,337 +17,63 @@ import duckdb
 import pandas as pd
 import pytest
 
+import __spark_entry__ as E
 import osm_spark.queries as Q
 
-# Queries registered in rounds 1-2 that already have >=1 driver-green
-# CORRECTNESS row and are deliberately parked outside the 50-slot
-# window.  FROZEN: adding a new @register name here instead of to
-# _DRIVER_WINDOW is exactly the silent-gap failure this test exists to
-# catch — new queries go into _DRIVER_WINDOW (rotating out a
-# family-redundant green row if the window is full).
-_LEGACY_OUT_OF_WINDOW = frozenset({
-    "change_merge", "doc_fingerprint", "embedding_lsh_bucket",
-    "embedding_neardup", "h3_kring", "history_group", "ids_counts",
-    "ivf_assign", "json_codec_roundtrip", "lang_id",
-    "media_frame_sample", "media_meta", "pip_cells", "prev_version",
-    "q1_pricing", "relation_membership", "replication_seqnum_search",
-    "reverse_detect", "ring_orientation", "route_linestring", "simhash",
-    "tile_bounds", "tile_containment", "tile_pyramid", "tile_quadkey",
-    "token_count_bpe", "updates_upto", "version_index", "way_bounds",
-    "way_centroid", "way_polygon", "wkb_roundtrip",
-    # round-4 rotations: driver-green in r03, parked to make room for
-    # osmapi_notes / changeset_feed_parse / xml_scan / table_prune_scan
-    # / osc_roundtrip / diff_roundtrip; every family keeps >=1 entry
-    # in-window (h3_assign+h3_knn; geojson_convert+geojson_way_features;
-    # ivf_topk+ann_trained_topk+kmeans_bigk; pip_wkb+pip_cells_adaptive+
-    # pip_polygon_covering; dedup/minhash/ngram/simhash/url/corpus;
-    # media_decode_real+media_resize).
-    "h3_parent", "geojson_features", "kmeans_iterate", "pip_broadcast",
-    "token_quality",
-    # round-5 swap: media_jpeg rotated back IN (progressive-JPEG change
-    # needs fresh attestation); media_resize (r04-green, untouched)
-    # parks here in its place.
-    "media_resize",
-    # round-4 web-page-prep rotations: driver-green in r03, parked to
-    # make room for html_extract / quality_repetition / pii_scrub /
-    # chunk_dedup; text family keeps dedup_exact + minhash_lsh +
-    # ngram_jaccard + corpus_prep in-window, temporal keeps
-    # asof_annotate + relation_annotate + history_at, stats keeps
-    # planet_stats + ids_pack_roundtrip.
-    "simhash_neardup", "url_canonical_rollup", "linestring_at",
-    "changeset_rollup",
-    # round-4 WARC-source rotation: ngram_jaccard (driver-green in r03)
-    # parked for warc_scan; text family keeps dedup_exact + minhash_lsh
-    # + corpus_prep + chunk_dedup in-window.
-    "ngram_jaccard",
-    # round-4 main-content rotation: covering_adaptive (driver-green in
-    # r03) parked for main_content; covering family keeps
-    # covering_polygon + pip_cells_adaptive + pip_polygon_covering.
-    "covering_adaptive",
-    # round-4 top_terms / robots_filter rotations: pip_wkb and
-    # osmapi_fetch (both driver-green in r03) parked; the PIP family
-    # keeps pip_cells_adaptive + pip_polygon_covering (+ wkb_roundtrip
-    # for the codec), the osmapi family keeps osmapi_notes +
-    # changeset_feed_parse.
-    "pip_wkb", "osmapi_fetch",
-    # round-4 warc_cdx_fetch rotation: way_linestring (driver-green in
-    # r03) parked; way-geometry resolution stays exercised by
-    # multipolygon_assembly and the flagship tile pipeline.
-    "way_linestring",
-    # round-4 link_pagerank rotation: dedup_exact (driver-green in r03)
-    # parked; exact dedup stays exercised in-window by chunk_dedup and
-    # corpus_prep.
-    "dedup_exact",
-    # round-4 bloom/sample/pack rotations: relation_annotate,
-    # embedding_topk and kmeans_bigk (all driver-green in r03) parked;
-    # temporal keeps asof_annotate + history_at, similarity keeps
-    # ivf_topk + ann_trained_topk + knn_kring.
-    "relation_annotate", "embedding_topk", "kmeans_bigk",
-    # round-4 link_components / anchor_rollup / web_sessions rotations:
-    # within_distance, child_first_depth and changeset_stream (all
-    # driver-green in r03) parked; geo-distance stays exercised by
-    # knn_kring + h3_knn, iterative plans by link_pagerank +
-    # link_components, streaming by replication_actions +
-    # replication_state.
-    "within_distance", "child_first_depth", "changeset_stream",
-    # round-4 contamination_check / bpe_pair_counts rotations: h3_assign
-    # and xml_codec_roundtrip (both r02+r03 driver-green) parked; hex
-    # stays exercised in-window by h3_knn's res-8 encode + k-ring walk,
-    # the XML codec by xml_scan's element-wise file scan.
-    "h3_assign", "xml_codec_roundtrip",
-    # round-4 semantic_dedup rotation: ivf_topk (r03 driver-green)
-    # parked; similarity keeps ann_trained_topk + knn_kring +
-    # semantic_dedup in-window.
-    "ivf_topk",
-    # round-4 crawl_delta rotation: raster_vector_roundtrip (r03
-    # driver-green) parked; tile semantics stay exercised in-window by
-    # tile_assign and the flagship entry() smoke.
-    "raster_vector_roundtrip",
-    # round-4 substr_dedup rotation: pip_cells_adaptive (r03
-    # driver-green) parked; PIP stays exercised in-window by
-    # pip_polygon_covering's interior/boundary-split covering test.
-    "pip_cells_adaptive",
-    # round-4 lm_perplexity rotation: covering_polygon (r03
-    # driver-green) parked; general-polygon covering stays exercised
-    # in-window by pip_polygon_covering over the same kernel.
-    "covering_polygon",
-    # round-4 neardup_clusters rotation: minhash_lsh (r02+r03
-    # driver-green) parked; its pair stage (minhash_signature /
-    # lsh_candidates / pair_jaccard) is neardup_clusters' front half,
-    # so every kernel stays under driver hash.
-    "minhash_lsh",
-    # round-4 frontier_schedule rotation: replication_state (r02+r03
-    # driver-green) parked; streaming keeps replication_actions
-    # in-window, the state-store epoch machinery stays covered by
-    # test_streaming_manifest + test_state_store.
-    "replication_state",
-    # round-4 index_search rotation: geojson_convert (r02+r03
-    # driver-green) parked; feature emission stays exercised in-window
-    # by geojson_way_features over the same converter kernels.
-    "geojson_convert",
-    # round-4 pq_topk rotation: planet_stats (r02+r03 driver-green)
-    # parked; the stats/argmax path stays exercised in-window by
-    # ids_pack_roundtrip and the flagship entry() rollup.
-    "planet_stats",
-    # round-4 nb_classify rotation: history_at (r03 driver-green)
-    # parked; temporal keeps asof_annotate in-window, snapshot
-    # semantics stay covered by test_state_store's VERSION AS OF suite.
-    "history_at",
-    # round-4 bm25_search rotation: knn_kring (r03 driver-green)
-    # parked; exact kNN stays in-window via h3_knn's k-ring
-    # expand-verify, tile math via tile_assign.
-    "knn_kring",
-    # round-4 page_snapshot_at rotation: corpus_prep (r03 driver-green)
-    # parked; the text family keeps chunk_dedup / substr_dedup /
-    # lm_perplexity / neardup_clusters / index_search / bm25_search /
-    # nb_classify in-window.
-    "corpus_prep",
-    # round-4 kmv_distinct rotation: ann_trained_topk (r03
-    # driver-green) parked; its Lloyd's training loop and Arrow argmin
-    # are pq_topk's front half, so the kernels stay under driver hash.
-    "ann_trained_topk",
-    # round-5 rotations: all 22 entries of the round-4
-    # _ROUND5_ROTATION_QUEUE swapped into _DRIVER_WINDOW; these 22 rows
-    # (every one r04 driver-green) park to make room.  Family coverage
-    # retained in-window: text keeps main_content / robots_filter /
-    # index_search / bm25_search / nb_classify / semantic_dedup /
-    # neardup_clusters (+ pmi_collocations / phrase_merge rotating in);
-    # sketches move kmv_distinct -> hll_registers; streaming keeps
-    # replication_actions; graph keeps link_pagerank + link_components
-    # (+ route_shortest); stats keeps ids_pack_roundtrip
-    # (+ length_quantiles); osmapi keeps osmapi_notes +
-    # changeset_feed_parse; codecs keep diff_roundtrip + xml_scan.
-    "interesting_nodes", "notes_date_codec", "point_on_surface",
-    "osc_roundtrip", "html_extract", "quality_repetition", "pii_scrub",
-    "chunk_dedup", "top_terms", "bloom_seen_filter", "sample_mix",
-    "pack_ctx", "anchor_rollup", "web_sessions", "contamination_check",
-    "bpe_pair_counts", "crawl_delta", "substr_dedup", "lm_perplexity",
-    "frontier_schedule", "page_snapshot_at", "kmv_distinct",
-    # round-5 xml_bz2_scan rotation: diff_roundtrip (r04 driver-green)
-    # parked; the XML codec family keeps xml_scan in-window and gains
-    # the splittable-bzip2 source row (both levels of split ownership
-    # under driver hash).
-    "diff_roundtrip",
-    # round-5 way_crossings rotation: multipolygon_assembly (r04
-    # driver-green) parked; the geometry family keeps convex_hull /
-    # simplify_dp / resample_line / wkt_codec / mvt_encode /
-    # geodesic_area in-window and gains the segment-intersection join.
-    "multipolygon_assembly",
-    # round-5 fuzzy_contamination rotation: bm25_search (r04
-    # driver-green) parked; index_search keeps the postings/top-k
-    # retrieval kernels in-window and the minhash/band kernels gain
-    # their cross-corpus decontamination row.
-    "bm25_search",
-    # round-5 hex_polyfill rotation: warc_cdx_fetch (r04 driver-green)
-    # parked; warc_scan keeps the container kernels in-window and the
-    # hex family gains its region->cells polyfill row.
-    "warc_cdx_fetch",
-    # round-5 hex_compact rotation: media_decode_real (r04 driver-green,
-    # untouched this round) parked; media_jpeg keeps the media kernels
-    # in-window (it carries the round-5 progressive-JPEG change) and
-    # the hex family gains its compactCells row.
-    "media_decode_real",
-    # round-5 hex_cover_join rotation: changeset_feed_parse (r04
-    # driver-green) parked; osmapi_notes keeps the osmapi parse kernels
-    # in-window and the hex family gains its broadcast cover-join row.
-    "changeset_feed_parse",
-    # round-5 od_matrix rotation: tile_assign (r04 driver-green)
-    # parked; segment_tiles / tile_quantiles / tile_topk_terms /
-    # tile_smooth keep the tile math in-window and od_matrix adds the
-    # z5 assignment + user-window flow rollup under driver hash.
-    "tile_assign",
-    # round-5 stay_points rotation: main_content (r04 driver-green)
-    # parked; the text family keeps robots_filter / index_search /
-    # fuzzy_contamination / nb_classify / semantic_dedup /
-    # neardup_clusters / pmi_collocations / phrase_merge in-window.
-    "main_content",
-    # round-5 nearest_site rotation: h3_knn (r04 driver-green) parked;
-    # hex_polyfill / hex_compact / hex_cover_join keep the hex kernels
-    # in-window and the spatial family gains the in-row Voronoi argmin.
-    "h3_knn",
-    # round-5 zonal_stats rotation: pip_polygon_covering (r04
-    # driver-green) parked; zonal_stats keeps the cell-join PIP kernels
-    # in-window, hex_polyfill / hex_cover_join keep the region->cells
-    # covering kernels under driver hash.
-    "pip_polygon_covering",
-    # round-5 hits_scores rotation: link_pagerank (r04 driver-green)
-    # parked; link_components + route_shortest keep the iterative-BSP
-    # kernels in-window and the graph family gains HITS.
-    "link_pagerank",
-    # round-5 countmin_heavy rotation: nb_classify (r04 driver-green)
-    # parked; the text family keeps robots_filter / index_search /
-    # fuzzy_contamination / semantic_dedup / neardup_clusters /
-    # pmi_collocations / phrase_merge in-window and the sketch family
-    # gains the Count-Min frequency grid next to hll_registers.
-    "nb_classify",
-    # round-5 embed_quantize rotation: pq_topk (r04 driver-green)
-    # parked; the similarity family keeps the int8-quantization row
-    # in-window (PQ/ADC + kmeans kernels stay registered + locally
-    # oracle-checked).
-    "pq_topk",
-    # round-5 link_triangles rotation: link_components (r04
-    # driver-green) parked; hits_scores / route_shortest / geo_cluster
-    # keep the iterative-BSP kernels in-window and the graph family
-    # gains the degree-oriented triangle count.
-    "link_components",
-    # round-5 hdr_quantiles rotation: index_search (r04 driver-green)
-    # parked; the text family keeps robots_filter / fuzzy_contamination
-    # / semantic_dedup / neardup_clusters / pmi_collocations /
-    # phrase_merge in-window and the sketch family gains the HDR
-    # quantile sketch.
-    "index_search",
-    # round-5 time_weighted_avg + event_funnel rotation: asof_annotate
-    # and semantic_dedup (both r04 driver-green) park; stay_points /
-    # event_funnel / time_weighted_avg keep the user-window temporal
-    # kernels in-window, neardup_clusters keeps the LSH dedup kernels,
-    # and the annotate cogroup kernels stay registered + locally
-    # oracle-checked.
-    "asof_annotate",
-    "semantic_dedup",
-    # round-5 table_merge_scan rotation: table_prune_scan (r04
-    # driver-green) parked; the COW-merge row exercises append +
-    # manifest stats + carried-file planning + pruned scan in one
-    # chain, so the storage family's kernels stay under driver hash.
-    "table_prune_scan",
-    # round-5 tile_coverage rotation: robots_filter (r04 driver-green)
-    # parked; the text family keeps fuzzy_contamination /
-    # neardup_clusters / pmi_collocations / phrase_merge in-window and
-    # the tile family gains the Sutherland-Hodgman coverage-fraction
-    # rasterization row.
-    "robots_filter",
-    # round-5 hll_pyramid rotation: xml_scan (r04 driver-green) parked;
-    # xml_bz2_scan routes through the same element-scan kernels, and
-    # the sketch family gains the register-max pyramid rollup.
-    "xml_scan",
-    # round-5 tile_skew_profile rotation: neardup_clusters (r04
-    # driver-green) parked; fuzzy_contamination keeps the minhash/band
-    # kernels in-window, geo_cluster / route_shortest keep the
-    # pointer-jump components kernels, and the engine gains the hot-key
-    # diagnostics row.
-    "neardup_clusters",
-    # round-5 window_rollup + weighted_sample rotation:
-    # geojson_way_features and ids_pack_roundtrip (both r04
-    # driver-green and UNTOUCHED this round) park — the 50-slot window
-    # is saturated with never-attested round-5 rows, and cross-round
-    # union coverage (every registered query driver-attested at least
-    # once) outranks re-attesting unchanged green rows.
-    "geojson_way_features",
-    "ids_pack_roundtrip",
-    # round-5 asof_join_dim + interval_join_rollup rotation:
-    # replication_actions and osmapi_notes (both r04 driver-green;
-    # replication.py untouched this round, osmapi round-5 changes are
-    # transport glue around unchanged parse kernels) park — same
-    # union-coverage rationale; the engine gains the two temporal
-    # joins the task brief names (as-of, range).
-    "replication_actions",
-    "osmapi_notes",
-})
+DRIVER_SLOTS = 50  # the driver's correctness gate checks the first 50
 
-# Queries awaiting their first driver window slot.  Round-5 start:
-# EMPTY — every entry of the round-4 queue rotated into _DRIVER_WINDOW
-# (VERDICT_r04 Next #1), so every registered query either sits in the
-# current window or has >=1 driver-green row from a prior round.
-#
-# Round-5 session-4 additions land HERE, not in the window: this is
-# exactly the saturation case the paragraph above reserves the queue
-# for.  All 50 window slots hold rows that have NEVER been driver-
-# attested (22 rotated round-4-queue queries + the round-5 sessions'
-# new operators + 3 re-attestations of round-5-changed code paths);
-# with round 5 the final round, parking any of them for a session-4
-# row trades one never-attested query for another — strictly zero-sum.
-# Session-4 queries therefore take the declared local-verification
-# path (scripts/check_oracle.py at sf0.01, re-runnable by the judge),
-# the same evidence class VERDICT_r04 accepted for the 22-query tail.
-_ROUND5_ROTATION_QUEUE = frozenset({
-    "table_zorder_scan",
-    "kcore_filter",
-    "cdc_chunk_dedup",
-    "dsir_weights",
-    "map_match_viterbi",
-    "tile_delta_counts",
-    "url_editdist_join",
-    "label_prop_classify",
-    "quadtree_bins",
-    "embed_jl_project",
-    "bpe_apply",
-    "phrase_search",
-    "table_bloom_scan",
-    "media_gif",
-    "jaccard_exact_join",
-    "scd2_build",
-    "bot_cadence",
-    "langid_eval",
-    "link_reciprocity",
-    "vocab_coverage",
-})
+_GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
+          "err": None}
 
 
-def test_every_query_is_windowed_or_legacy():
-    window = set(Q._DRIVER_WINDOW)
-    unaccounted = (
-        set(Q.SPARK_QUERIES) - window - _LEGACY_OUT_OF_WINDOW
-        - _ROUND5_ROTATION_QUEUE
-    )
-    assert not unaccounted, (
-        f"new queries outside the driver gate: {sorted(unaccounted)} — "
-        "add them to _DRIVER_WINDOW (rotate out a green row if full)"
-    )
+def test_attestation_order_on_synthetic_ledger(tmp_path):
+    """Never-attested first (a red row does not count), then least
+    recently attested; ties keep registration order; no ledger keeps
+    registration order."""
+    names = ["a", "b", "c", "d", "e", "f"]
+    ledger = {
+        1: {"a": _GREEN, "b": _GREEN, "c": _GREEN, "f": _GREEN},
+        2: {
+            "a": {**_GREEN, "hash_match": False},  # red: a stays at r1
+            "b": _GREEN,
+            "e": {**_GREEN, "err": "boom"},  # red only: never attested
+            "f": {**_GREEN, "schema_match": False},
+        },
+        3: {"c": _GREEN, "gone": _GREEN},  # a deregistered name is ignored
+    }
+    assert E.attestation_order(names, ledger) == ["d", "e", "a", "f", "b", "c"]
+    assert E.attestation_order(names, {}) == names
+    assert E.attestation_order([], ledger) == []
+
+    assert E.read_ledger(tmp_path) == {}
+    (tmp_path / "CORRECTNESS_r07.json").write_text('{"a": {"err": "x"}}')
+    (tmp_path / "CORRECTNESS_r07.json.bak").write_text("not json")
+    assert E.read_ledger(tmp_path) == {7: {"a": {"err": "x"}}}
 
 
-def test_window_fills_exactly_the_driver_slots():
-    live = [k for k in Q._DRIVER_WINDOW if k in Q.SPARK_QUERIES]
-    assert len(live) == 50, (
-        f"driver gates the FIRST 50 queries; window has {len(live)} live "
-        "entries — >50 means the tail silently falls outside the gate, "
-        "<50 wastes slots"
-    )
-    assert len(set(live)) == len(live), "duplicate names in _DRIVER_WINDOW"
-    # window entries must actually be the first 50 of queries()
-    assert list(Q.SPARK_QUERIES)[:50] == live
+def test_driver_order_follows_the_ledger():
+    """queries() is every registered query, in attestation_order over
+    the CORRECTNESS_r*.json files next to the entry module."""
+    got = list(E.queries())
+    assert sorted(got) == sorted(Q.SPARK_QUERIES)
+    assert got == E.attestation_order(Q.SPARK_QUERIES, E.read_ledger())
+
+
+def test_never_attested_queries_lead_the_driver_window():
+    """No query ends a round unattested: every registered query with no
+    green ledger row sits inside the driver's window."""
+    ledger = E.read_ledger()
+    green = {
+        n for rows in ledger.values() for n, r in rows.items()
+        if E._attested(r)
+    }
+    never = set(Q.SPARK_QUERIES) - green
+    window = set(list(E.queries())[:DRIVER_SLOTS])
+    assert never <= window, sorted(never - window)
 
 
 def test_windowed_queries_have_oracles():
-    live = [k for k in Q._DRIVER_WINDOW if k in Q.SPARK_QUERIES]
+    live = list(E.queries())[:DRIVER_SLOTS]
     missing = [k for k in live if k not in Q.ORACLE_SQL]
     assert not missing, f"windowed queries without oracle SQL: {missing}"
 
