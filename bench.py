@@ -191,8 +191,7 @@ def _best_of_children(args: list[str], runs: int) -> dict:
 # homogeneous sessions reproduce; shared-session protocol does not.
 # These groups are the headline query set, timed in this order.
 QUERY_GROUPS: list[list[str]] = [
-    ["tile_assign", "tile_pyramid", "pip_broadcast", "pip_cells",
-     "pip_cells_adaptive", "pip_polygon_covering", "pip_wkb"],
+    ["tile_assign", "tile_pyramid", "pip_cells", "pip_polygon_covering"],
     ["h3_assign", "h3_knn", "knn_kring", "covering_adaptive",
      "covering_polygon", "kmeans_bigk"],
     ["asof_annotate", "multipolygon_assembly", "way_centroid", "q1_pricing"],

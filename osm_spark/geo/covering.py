@@ -82,6 +82,55 @@ def _seed_candidates(polygons: DataFrame, z: int) -> DataFrame:
     )
 
 
+DISJOINT, BOUNDARY, FULL = 0, 1, 2
+
+
+def _frontier(
+    polygons: DataFrame,
+    z_min: int,
+    z_max: int,
+    classify,
+    checkpoint_every: int,
+) -> DataFrame:
+    """The frontier recursion both coverings share. ``classify(z)`` is a
+    Column grading each (tile_x, tile_y) candidate at zoom z as
+    DISJOINT / BOUNDARY / FULL. FULL tiles emit; BOUNDARY tiles descend
+    to their 4 children; at ``z_max`` FULL and BOUNDARY both emit. Rows
+    gain (zoom, tile_x, tile_y, cell_full), ``cell_full`` false only for
+    z_max boundary tiles. Every ``checkpoint_every`` levels the graded
+    frame, DISJOINT rows dropped, is materialized (eager
+    localCheckpoint), cutting the lineage. At z_max only the emit reads
+    it, so it is materialized there only when every level is (the ring
+    classify: a covering read twice downstream must not re-run it)."""
+    cand = _seed_candidates(polygons, z_min)
+    outs: list[DataFrame] = []
+    for z in range(z_min, z_max + 1):
+        cand = cand.withColumn("_cls", classify(z)).filter(
+            F.col("_cls") != DISJOINT
+        )
+        cut = checkpoint_every and (z - z_min + 1) % checkpoint_every == 0
+        if cut and (z < z_max or checkpoint_every == 1):
+            cand = cand.localCheckpoint(eager=True)
+        if z == z_max:
+            outs.append(
+                cand.withColumn("zoom", F.lit(z))
+                .withColumn("cell_full", F.col("_cls") == FULL)
+                .drop("_cls")
+            )
+            break
+        outs.append(
+            cand.filter(F.col("_cls") == FULL)
+            .drop("_cls")
+            .withColumn("zoom", F.lit(z))
+            .withColumn("cell_full", F.lit(True))
+        )
+        cand = _children4(cand.filter(F.col("_cls") == BOUNDARY).drop("_cls"))
+    out = outs[0]
+    for lv in outs[1:]:
+        out = out.unionByName(lv)
+    return out
+
+
 def adaptive_covering(
     polygons: DataFrame,
     z_min: int,
@@ -90,7 +139,7 @@ def adaptive_covering(
 ) -> DataFrame:
     """Explode each bbox row (cols xmin/xmax/ymin/ymax, any others
     carried through) into its adaptive covering: rows gain
-    (zoom, tile_x, tile_y).
+    (zoom, tile_x, tile_y, cell_full).
 
     FRONTIER RECURSION, not per-zoom grid enumeration: candidates at
     zoom z+1 are only the 4 children of zoom-z BOUNDARY tiles
@@ -110,23 +159,15 @@ def adaptive_covering(
     cheap to materialize; deep z ranges otherwise nest one explode per
     level into a single giant plan, the measured failure mode of
     iterative loops in plans/iterate.py)."""
-    cand = _seed_candidates(polygons, z_min)
-    outs: list[DataFrame] = []
-    for z in range(z_min, z_max + 1):
-        inter = _intersects("tile_x", "tile_y", z)
-        if z == z_max:
-            outs.append(cand.filter(inter).withColumn("zoom", F.lit(z)))
-            break
-        full = _fully_inside("tile_x", "tile_y", z)
-        outs.append(cand.filter(inter & full).withColumn("zoom", F.lit(z)))
-        frontier = cand.filter(inter & ~full)
-        if checkpoint_every and (z - z_min + 1) % checkpoint_every == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-        cand = _children4(frontier)
-    out = outs[0]
-    for lv in outs[1:]:
-        out = out.unionByName(lv)
-    return out
+
+    def classify(z: int):
+        return (
+            F.when(~_intersects("tile_x", "tile_y", z), DISJOINT)
+            .when(_fully_inside("tile_x", "tile_y", z), FULL)
+            .otherwise(BOUNDARY)
+        )
+
+    return _frontier(polygons, z_min, z_max, classify, checkpoint_every)
 
 
 def covering_candidate_counts(
@@ -260,9 +301,6 @@ def _edges_hit_rect(xi, yi, xj, yj, w, s, e, n) -> bool:
     return bool((ok & (t0 <= t1)).any())
 
 
-DISJOINT, BOUNDARY, FULL = 0, 1, 2
-
-
 def classify_tile_vs_rings(rings, tx: int, ty: int, z: int) -> int:
     """Exact tile-vs-polygon classification (see module comment).
     ``rings``: [(xs, ys), ...] float64 arrays, ring closed or not."""
@@ -335,35 +373,16 @@ def polygon_covering(
     false only for z_max boundary tiles. Downstream PIP joins use it to
     skip the ray-cast refine for interior cells — refine cost becomes
     O(boundary candidates), not O(all candidates)."""
-    cand = _seed_candidates(polygons, z_min)
-    outs: list[DataFrame] = []
-    for z in range(z_min, z_max + 1):
-        cls = _classify_udf(z, wkb_col)
-        # checkpoint EVERY classified level: the frame is consumed
-        # twice (emit + next frontier) and each emit branch of the
-        # final union would otherwise re-execute the whole classify
-        # chain — level z's Arrow pass would run (z_max - z + 1) times
-        # (measured: 14 ArrowEvalPython nodes for a 4-level covering).
-        # Candidates are O(perimeter) rows — cheap to materialize.
-        cand = cand.withColumn(
-            "_cls", cls(F.col(wkb_col), F.col("tile_x"), F.col("tile_y"))
-        ).localCheckpoint(eager=True)
-        if z == z_max:
-            outs.append(
-                cand.filter(F.col("_cls") >= BOUNDARY)
-                .withColumn("zoom", F.lit(z))
-                .withColumn("cell_full", F.col("_cls") == FULL)
-                .drop("_cls")
-            )
-            break
-        outs.append(
-            cand.filter(F.col("_cls") == FULL)
-            .drop("_cls")
-            .withColumn("zoom", F.lit(z))
-            .withColumn("cell_full", F.lit(True))
+
+    def classify(z: int):
+        return _classify_udf(z, wkb_col)(
+            F.col(wkb_col), F.col("tile_x"), F.col("tile_y")
         )
-        cand = _children4(cand.filter(F.col("_cls") == BOUNDARY).drop("_cls"))
-    out = outs[0]
-    for lv in outs[1:]:
-        out = out.unionByName(lv)
-    return out
+
+    # checkpoint EVERY classified level: the frame is consumed twice
+    # (emit + next frontier) and each emit branch of the final union
+    # would otherwise re-execute the whole classify chain — level z's
+    # Arrow pass would run (z_max - z + 1) times (measured: 14
+    # ArrowEvalPython nodes for a 4-level covering). Candidates are
+    # O(perimeter) rows — cheap to materialize.
+    return _frontier(polygons, z_min, z_max, classify, checkpoint_every=1)

@@ -1,4 +1,4 @@
-"""Point-in-polygon kernels and join strategies.
+"""Point-in-polygon kernels and joins.
 
 The ray-cast kernel reproduces the reference's ``polygonContains``
 formula verbatim (reference osmgeojson/build_polygon.go:218-243):
@@ -10,19 +10,25 @@ bit-for-bit. The orientation kernel keeps the origin-offset shoelace
 trick (internal/mputil/mputil.go:104-124) and accumulates sequentially
 (np.add.accumulate) to match Go's left-to-right float summation.
 
-Join strategies (SURVEY §2.3 "inner-ring → outer assignment" generalized
-into the engine's spatial join):
+Joins (SURVEY §2.3 "inner-ring → outer assignment" generalized into the
+engine's spatial join) turn the theta join into an equi join on tile
+keys, then run one ray-cast refine over the candidates:
 
-- ``pip_join_broadcast``: polygon side small — ship rings to every task
-  (Spark broadcast), evaluate fully vectorized per Arrow batch via
-  ``mapInPandas``. No shuffle at all; the 100 TB plan is a single
-  narrow map over pages.
-- ``pip_join_cells``: polygon side large — turn the theta join into an
-  equi join: polygons explode to their covering Z/X/Y tiles (bbox ->
-  tile.Range), points compute tile.At, equi-join on tile key (+ an
-  optional deterministic salt for hot cells), then ray-cast refine.
-  Shuffle volume is |points| + |polygon covering cells|, and AQE skew
-  join plus the salt keep hot tiles (cities) from dominating a task.
+- ``pip_join_cells``: polygons explode to their covering Z/X/Y tiles
+  (bbox -> tile.Range), points compute tile.At, equi-join on tile key
+  (+ an optional deterministic salt for hot cells). A small polygon
+  side broadcasts under AQE, so no point is shuffled; a large one
+  shuffles |points| + |polygon covering cells|, and AQE skew join plus
+  the salt keep hot tiles (cities) from dominating a task.
+- ``pip_join_polygon_covering``: the ring-exact adaptive covering
+  (geo/covering.py); cells proved inside the polygon accept their points
+  in the JVM, and only boundary cells reach the refine.
+
+The refine (``_raycast_refine``) is one ``mapInArrow`` pass: rows group
+by ``poly_id`` per Arrow batch, each polygon's rings are read once per
+group (zero-copy from ``xs``/``ys`` list arrays, or decoded from a
+``wkb`` column), and containment is even-odd over the rings, so holes
+subtract.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from osm_spark.geo import tiles
 
@@ -81,73 +88,69 @@ def ring_orientation(xs: np.ndarray, ys: np.ndarray) -> int:
     return 1 if area > 0 else -1
 
 
-# --------------------------------------------------------- join strategies
-def pip_join_broadcast(
-    points: DataFrame,
-    polygons: list[tuple],
-    x_col: str = "lon",
-    y_col: str = "lat",
-    poly_id_col: str = "poly_id",
-) -> DataFrame:
-    """Join points against a SMALL polygon list (broadcast).
+# ------------------------------------------------------------ the refine
+_PAYLOAD = ("xs", "ys", "xmin", "xmax", "ymin", "ymax", "wkb")
 
-    ``polygons`` is ``[(poly_id, xs_list, ys_list), ...]`` — collected on
-    the driver (the caller asserts smallness). Emits one output row per
-    (point, containing polygon). Execution: mapInPandas — one pass over
-    points, numpy-vectorized per polygon with a bbox pre-mask, no shuffle.
-    """
-    spark = points.sparkSession
-    sc = spark.sparkContext
-    prepared = [
-        (
-            pid,
-            np.asarray(xs, dtype=np.float64),
-            np.asarray(ys, dtype=np.float64),
-            float(np.min(xs)),
-            float(np.max(xs)),
-            float(np.min(ys)),
-            float(np.max(ys)),
-        )
-        for pid, xs, ys in polygons
-    ]
-    bpolys = sc.broadcast(prepared)
-    in_cols = points.columns
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    # NB: StructType.add mutates in place — never call it on df.schema.
+def _float64(col) -> np.ndarray:
+    """Arrow numeric column -> float64 numpy (NULL -> NaN, never inside)."""
+    return np.asarray(col.to_numpy(zero_copy_only=False), dtype=np.float64)
+
+
+def refine_batch(batch, x_col: str, y_col: str):
+    """Keep the rows of one candidate Arrow batch whose point lies inside
+    the row's polygon, in input order, minus the payload columns.
+
+    Rows group by ``poly_id`` (stable argsort + run starts); each group
+    reads its polygon's rings once — from the ``wkb`` column when the
+    batch has one, else the ``xs``/``ys`` list slices — and XORs
+    :func:`ring_contains` over them. Rows with a NULL ``poly_id`` drop."""
+    from osm_spark.geo import wkb as W
+
+    names = batch.schema.names
+    if "wkb" in names:
+        wkbs = batch.column("wkb")
+
+        def rings_of(r):
+            return W.decode(wkbs[r].as_py())[1]
+    else:
+        xl, yl = batch.column("xs"), batch.column("ys")
+        xo, xv = xl.offsets.to_numpy(), _float64(xl.values)
+        yo, yv = yl.offsets.to_numpy(), _float64(yl.values)
+
+        def rings_of(r):
+            return [(xv[xo[r]:xo[r + 1]], yv[yo[r]:yo[r + 1]])]
+
+    keep = np.zeros(batch.num_rows, dtype=bool)
+    pid = batch.column("poly_id")
+    valid = np.flatnonzero(pid.is_valid().to_numpy(zero_copy_only=False))
+    order = valid[np.argsort(pid.take(valid).to_numpy(), kind="stable")]
+    if order.size:
+        sp = pid.take(order).to_numpy()
+        starts = np.flatnonzero(np.r_[True, sp[1:] != sp[:-1]])
+        px, py = _float64(batch.column(x_col)), _float64(batch.column(y_col))
+        for idx in np.split(order, starts[1:]):
+            inside = np.zeros(idx.size, dtype=bool)
+            for xs, ys in rings_of(idx[0]):
+                inside ^= ring_contains(xs, ys, px[idx], py[idx])  # even-odd
+            keep[idx] = inside
+    return batch.filter(keep).select([n for n in names if n not in _PAYLOAD])
+
+
+def _raycast_refine(cand: DataFrame, x_col: str, y_col: str) -> DataFrame:
+    """The shared refine: :func:`refine_batch` over every Arrow batch."""
     out_schema = StructType(
-        list(points.schema.fields) + [StructField(poly_id_col, LongType())]
+        [f for f in cand.schema.fields if f.name not in _PAYLOAD]
     )
 
-    def gen(batches):
-        import pandas as pd
+    def refine(batches):
+        for batch in batches:
+            yield refine_batch(batch, x_col, y_col)
 
-        polys = bpolys.value
-        for pdf in batches:
-            px = pdf[x_col].to_numpy(dtype=np.float64)
-            py = pdf[y_col].to_numpy(dtype=np.float64)
-            outs = []
-            for pid, xs, ys, xmin, xmax, ymin, ymax in polys:
-                mask = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-                idx = np.nonzero(mask)[0]
-                if idx.size == 0:
-                    continue
-                inside = ring_contains(xs, ys, px[idx], py[idx])
-                hit = idx[inside]
-                if hit.size:
-                    sub = pdf.iloc[hit].copy()
-                    sub[poly_id_col] = pid
-                    outs.append(sub)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {c: pd.Series(dtype=pdf[c].dtype) for c in in_cols}
-                ).assign(**{poly_id_col: pd.Series(dtype="int64")})
-
-    return points.mapInPandas(gen, schema=out_schema)
+    return cand.mapInArrow(refine, schema=out_schema)
 
 
+# ------------------------------------------------------------------ joins
 def polygon_covering_tiles(polygons: DataFrame, zoom: int) -> DataFrame:
     """Explode each polygon (carrying ring arrays + bbox) into its
     covering tiles at ``zoom`` — bbox -> tile x/y ranges -> sequence().
@@ -203,190 +206,6 @@ def pip_join_cells(
     return _raycast_refine(cand, x_col, y_col)
 
 
-def pip_join_broadcast_wkb(
-    points: DataFrame,
-    polygons_wkb: list[tuple[int, bytes]],
-    x_col: str = "lon",
-    y_col: str = "lat",
-    poly_id_col: str = "poly_id",
-) -> DataFrame:
-    """Broadcast PIP join over WKB polygon payloads (north star:
-    "ray-casting over WKB polygons in pandas UDFs").
-
-    ``polygons_wkb``: [(poly_id, wkb_bytes)] — Polygon or MultiPolygon,
-    either byte order. Decoded ONCE per task from the broadcast (not per
-    batch), then the same vectorized ray-cast refine as
-    :func:`pip_join_broadcast`; holes subtract via even-odd parity
-    (xor over rings). No shuffle at all.
-    """
-    from osm_spark.geo import wkb as W
-
-    spark = points.sparkSession
-    bpolys = spark.sparkContext.broadcast(polygons_wkb)
-    in_cols = points.columns
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(points.schema.fields) + [StructField(poly_id_col, LongType())]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        prepared = []
-        for pid, buf in bpolys.value:
-            _, rings = W.decode(buf)
-            rings = [
-                (xs, ys) for xs, ys in rings if len(xs) > 0
-            ]
-            if not rings:
-                continue
-            allx = np.concatenate([r[0] for r in rings])
-            ally = np.concatenate([r[1] for r in rings])
-            prepared.append(
-                (pid, rings, allx.min(), allx.max(), ally.min(), ally.max())
-            )
-        for pdf in batches:
-            px = pdf[x_col].to_numpy(dtype=np.float64)
-            py = pdf[y_col].to_numpy(dtype=np.float64)
-            outs = []
-            for pid, rings, xmin, xmax, ymin, ymax in prepared:
-                mask = (px >= xmin) & (px <= xmax) & (py >= ymin) & (py <= ymax)
-                idx = np.nonzero(mask)[0]
-                if idx.size == 0:
-                    continue
-                inside = np.zeros(idx.size, dtype=bool)
-                for xs, ys in rings:
-                    # even-odd: holes flip containment back off
-                    inside ^= ring_contains(xs, ys, px[idx], py[idx])
-                hit = idx[inside]
-                if hit.size:
-                    sub = pdf.iloc[hit].copy()
-                    sub[poly_id_col] = pid
-                    outs.append(sub)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {c: pd.Series(dtype=pdf[c].dtype) for c in in_cols}
-                ).assign(**{poly_id_col: pd.Series(dtype="int64")})
-
-    return points.mapInPandas(gen, schema=out_schema)
-
-
-def _raycast_refine(cand: DataFrame, x_col: str, y_col: str) -> DataFrame:
-    """Shared ray-cast refine: drop ring/bbox payload cols, keep rows
-    whose point is inside the ring (vectorized per distinct polygon per
-    Arrow batch)."""
-    out_fields = [
-        f for f in cand.schema.fields
-        if f.name not in ("xs", "ys", "xmin", "xmax", "ymin", "ymax")
-    ]
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    def refine(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf[out_cols]
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[x_col].to_numpy(dtype=np.float64)
-            py = pdf[y_col].to_numpy(dtype=np.float64)
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                xs = np.asarray(pdf["xs"].iloc[idx[0]], dtype=np.float64)
-                ys = np.asarray(pdf["ys"].iloc[idx[0]], dtype=np.float64)
-                keep[idx] = ring_contains(xs, ys, px[idx], py[idx])
-            yield pdf.loc[keep, out_cols]
-
-    return cand.mapInPandas(refine, schema=out_schema)
-
-
-def pip_join_cells_adaptive(
-    points: DataFrame,
-    polygons: DataFrame,
-    z_min: int = 4,
-    z_max: int = 7,
-    x_col: str = "lon",
-    y_col: str = "lat",
-) -> DataFrame:
-    """Scale-path PIP join over the S2-style ADAPTIVE covering: polygons
-    explode to mixed-zoom covering cells (coarse where fully inside,
-    fine only along the boundary — geo/covering.py), points explode to
-    their tile at each zoom in [z_min, z_max] (one scan, |zooms| rows
-    per point), equi-join on (zoom, tile_x, tile_y), ray-cast refine.
-
-    Versus the fixed-zoom pip_join_cells: the covering side shrinks by
-    orders of magnitude for large/elongated polygons (no full fine-grid
-    enumeration of the interior), at the cost of a small constant
-    fan-out on the point side — the right trade at 10^12 points where
-    the shuffle is dominated by the polygon-cell replication."""
-    from osm_spark.geo.covering import adaptive_covering
-
-    zs = list(range(z_min, z_max + 1))
-    zarr = F.array(
-        *[
-            F.struct(
-                F.lit(z).alias("zoom"),
-                tiles.tile_x(x_col, z).alias("tile_x"),
-                tiles.tile_y(y_col, z).alias("tile_y"),
-            )
-            for z in zs
-        ]
-    )
-    ptsz = points.select("*", F.explode(zarr).alias("_zc")).select(
-        "*",
-        F.col("_zc.zoom").alias("zoom"),
-        F.col("_zc.tile_x").alias("tile_x"),
-        F.col("_zc.tile_y").alias("tile_y"),
-    ).drop("_zc")
-    cov = adaptive_covering(polygons, z_min, z_max)
-    cand = ptsz.join(cov, ["zoom", "tile_x", "tile_y"]).drop(
-        "zoom", "tile_x", "tile_y"
-    )
-    return _raycast_refine(cand, x_col, y_col)
-
-
-def _raycast_refine_wkb(
-    cand: DataFrame, x_col: str, y_col: str, wkb_col: str = "wkb"
-) -> DataFrame:
-    """Ray-cast refine over WKB polygon payloads: even-odd across ALL
-    rings (holes subtract — the reference's outer/inner semantics,
-    build_polygon.go:181-243), rings decoded once per polygon per Arrow
-    batch. Same formula-verbatim kernel as every other refine."""
-    from osm_spark.geo import wkb as W
-
-    out_fields = [f for f in cand.schema.fields if f.name != wkb_col]
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    def refine(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf[out_cols]
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            px = pdf[x_col].to_numpy(dtype=np.float64)
-            py = pdf[y_col].to_numpy(dtype=np.float64)
-            for _pid, idx in pdf.groupby("poly_id").indices.items():
-                _, rings = W.decode(bytes(pdf[wkb_col].iloc[idx[0]]))
-                inside = np.zeros(len(idx), dtype=bool)
-                for xs, ys in rings:
-                    inside ^= ring_contains(
-                        np.asarray(xs, dtype=np.float64),
-                        np.asarray(ys, dtype=np.float64),
-                        px[idx], py[idx],
-                    )
-                keep[idx] = inside
-            yield pdf.loc[keep, out_cols]
-
-    return cand.mapInPandas(refine, schema=out_schema)
-
-
 def pip_join_polygon_covering(
     points: DataFrame,
     polygons: DataFrame,
@@ -435,4 +254,4 @@ def pip_join_polygon_covering(
     )
     inside = cand.filter(F.col("cell_full")).drop("cell_full", "wkb")
     boundary = cand.filter(~F.col("cell_full")).drop("cell_full")
-    return inside.unionByName(_raycast_refine_wkb(boundary, x_col, y_col))
+    return inside.unionByName(_raycast_refine(boundary, x_col, y_col))

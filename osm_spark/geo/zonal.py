@@ -8,10 +8,9 @@ step a geocoded training corpus needs to audit its geographic mix.
 
 Spark-first shape:
 
-- The assignment reuses the audited PIP joins verbatim — broadcast
-  (zero-shuffle) when the zone set is parameter-sized, cell equi-join
-  (+salt, +AQE skew join) when it is data-sized.  Nothing new to audit
-  on the join side.
+- The assignment reuses the audited cell equi-join PIP verbatim (+salt,
+  +AQE skew join; a parameter-sized zone set broadcasts, so no point is
+  shuffled).  Nothing new to audit on the join side.
 - The rollup is ONE zone-keyed groupBy with map-side partial
   aggregation — shuffle volume is |zones|, not |points|; hot zones
   (a continent polygon) cost a partial-agg merge, not a data pileup.

@@ -15,7 +15,9 @@ Cross-engine float discipline:
 
 from __future__ import annotations
 
+import atexit
 import math
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,12 +45,34 @@ def _persist(df: DataFrame) -> DataFrame:
     return df
 
 
+# Snapshot-table directories written by the most recent query
+# invocation. The returned DataFrame still reads its table lazily, so a
+# directory is removed when the next query starts (or at exit), which
+# bounds a long session to one query's tables on disk.
+_TABLE_DIRS: list[str] = []
+
+
+def _table_dir(prefix: str) -> str:
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    _TABLE_DIRS.append(path)
+    return path
+
+
+@atexit.register
+def _remove_table_dirs() -> None:
+    while _TABLE_DIRS:
+        shutil.rmtree(_TABLE_DIRS.pop(), ignore_errors=True)
+
+
 def _release_persists() -> None:
     while _PERSISTED:
         try:
             _PERSISTED.pop().unpersist(blocking=False)
         except Exception:
             pass
+    _remove_table_dirs()
 
 
 def register(name: str, sql: str | None = None):
@@ -607,20 +631,6 @@ def _rect_polygons_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         lat0.alias("ymin"),
         lat1.alias("ymax"),
     )
-
-
-@register("pip_broadcast", _PIP_ORACLE)
-def q_pip_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast PIP join: small polygon side shipped to every task,
-    ray-cast refine fully vectorized per Arrow batch — zero shuffle."""
-    from osm_spark.geo import pip
-
-    polys = [
-        (r.poly_id, r.xs, r.ys)
-        for r in _rect_polygons_df(spark, sf_dir).collect()
-    ]
-    pts = pages.page_points(spark, sf_dir)
-    return pip.pip_join_broadcast(pts, polys).select("doc_id", "poly_id")
 
 
 @register("pip_cells", _PIP_ORACLE)
@@ -2997,14 +3007,11 @@ def q_table_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     read) must be invisible; the `pruned` column asserts the planner
     actually skipped files (a contiguous id predicate over
     range-partitioned files must leave some file fully outside)."""
-    import tempfile
-
     from osm_spark.pipeline.table import SnapshotTable
 
     ev = _t(spark, sf_dir, "events")
     t = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="osm_spark_snap_"),
-        stats_cols=("event_id",),
+        spark, _table_dir("osm_spark_snap_"), stats_cols=("event_id",)
     )
     t.append(
         ev.select("event_id", "user_id").repartitionByRange(8, "event_id")
@@ -3658,24 +3665,6 @@ def q_wkb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("pip_wkb", _PIP_ORACLE)
-def q_pip_wkb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast PIP join whose polygon side travels as WKB binary:
-    rings encode to ISO WKB, broadcast, decode once per task inside the
-    Arrow UDF, then the verbatim ray-cast refine (build_polygon.go
-    formula). Same oracle as pip_broadcast/pip_cells — the WKB hop must
-    be invisible to the join result."""
-    from osm_spark.geo import pip
-    from osm_spark.geo import wkb as W
-
-    polys_wkb = [
-        (r.poly_id, W.encode_polygon([(r.xs, r.ys)]))
-        for r in _rect_polygons_df(spark, sf_dir).collect()
-    ]
-    pts = pages.page_points(spark, sf_dir)
-    return pip.pip_join_broadcast_wkb(pts, polys_wkb).select("doc_id", "poly_id")
-
-
 # =====================================================================
 # S2-style adaptive multi-zoom covering (geo/covering.py)
 # =====================================================================
@@ -3758,6 +3747,29 @@ def _triangle_covering_sql(z_min: int, z_max: int) -> str:
     return f"WITH {tri_cte} " + " UNION ALL ".join(parts)
 
 
+def _triangle_polygons_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each rect fixture bbox cut to its lower-left right triangle, as
+    (poly_id, xmin..ymax, wkb) with the triangle as an ISO WKB Polygon."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from osm_spark.geo import wkb as W
+
+    @pandas_udf("binary")
+    def enc(x0s, x1s, y0s, y1s):
+        return pd.Series(
+            [
+                W.encode_polygon([([x0, x1, x0, x0], [y0, y0, y1, y0])])
+                for x0, x1, y0, y1 in zip(x0s, x1s, y0s, y1s)
+            ]
+        )
+
+    return _rect_polygons_df(spark, sf_dir).select(
+        "poly_id", "xmin", "xmax", "ymin", "ymax",
+        enc("xmin", "xmax", "ymin", "ymax").alias("wkb"),
+    )
+
+
 @register("covering_polygon", _triangle_covering_sql(4, 7))
 def q_covering_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GENERAL-polygon adaptive covering (geo/covering.py
@@ -3769,24 +3781,7 @@ def q_covering_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle, so interior coarsening AND exterior-corner drop-out are
     both exercised; the oracle is an independent separating-axes closed
     form for that triangle."""
-    from osm_spark.geo import wkb as W
-    from pyspark.sql.functions import pandas_udf
-    import pandas as pd
-
-    def _enc_fn(x0s, x1s, y0s, y1s):
-        out = []
-        for x0, x1, y0, y1 in zip(x0s, x1s, y0s, y1s):
-            out.append(
-                W.encode_polygon([([x0, x1, x0, x0], [y0, y0, y1, y0])])
-            )
-        return pd.Series(out)
-
-    _enc = pandas_udf(_enc_fn, "binary")
-
-    tri = _rect_polygons_df(spark, sf_dir).select(
-        "poly_id", "xmin", "xmax", "ymin", "ymax",
-        _enc("xmin", "xmax", "ymin", "ymax").alias("wkb"),
-    )
+    tri = _triangle_polygons_df(spark, sf_dir)
     return _cov.polygon_covering(tri, 4, 7).select(
         "poly_id", "zoom", "tile_x", "tile_y"
     )
@@ -3818,40 +3813,10 @@ def q_pip_polygon_covering(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH the ring-exact covering and the skip-refine shortcut must be
     exactly right for the join outputs to agree."""
     from osm_spark.geo import pip
-    from osm_spark.geo import wkb as W
-    from pyspark.sql.functions import pandas_udf
-    import pandas as pd
 
-    def _enc_fn(x0s, x1s, y0s, y1s):
-        return pd.Series(
-            [
-                W.encode_polygon([([x0, x1, x0, x0], [y0, y0, y1, y0])])
-                for x0, x1, y0, y1 in zip(x0s, x1s, y0s, y1s)
-            ]
-        )
-
-    _enc = pandas_udf(_enc_fn, "binary")
-    tri = _rect_polygons_df(spark, sf_dir).select(
-        "poly_id", "xmin", "xmax", "ymin", "ymax",
-        _enc("xmin", "xmax", "ymin", "ymax").alias("wkb"),
-    )
+    tri = _triangle_polygons_df(spark, sf_dir)
     pts = pages.page_points(spark, sf_dir)
     return pip.pip_join_polygon_covering(pts, tri, z_min=4, z_max=7).select(
-        "doc_id", "poly_id"
-    )
-
-
-@register("pip_cells_adaptive", _PIP_ORACLE)
-def q_pip_cells_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIP join through the adaptive multi-zoom covering (points fan
-    out to one tile per zoom, polygons to their S2-style covering cells,
-    equi-join on (zoom, x, y), ray-cast refine). Same oracle as the
-    other PIP variants."""
-    from osm_spark.geo import pip
-
-    pts = pages.page_points(spark, sf_dir)
-    polys = _rect_polygons_df(spark, sf_dir)
-    return pip.pip_join_cells_adaptive(pts, polys, z_min=4, z_max=7).select(
         "doc_id", "poly_id"
     )
 
@@ -9135,8 +9100,6 @@ def q_table_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the post-merge state directly from events, so the hash
     checks upsert semantics (replace + insert + untouched) through the
     storage layer."""
-    import tempfile
-
     from osm_spark.pipeline.table import SnapshotTable
 
     ev = _t(spark, sf_dir, "events")
@@ -9145,8 +9108,7 @@ def q_table_merge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 1000).cast("long").alias("vq"),
     )
     t = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="osm_spark_merge_"),
-        stats_cols=("event_id",),
+        spark, _table_dir("osm_spark_merge_"), stats_cols=("event_id",)
     )
     t.append(base.repartitionByRange(8, "event_id"))
     updates = (
@@ -10576,8 +10538,6 @@ def q_table_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     were actually skipped for every probe (the absent url prunes all
     16).  The oracle answers the same lookups straight off the
     documents table."""
-    import tempfile
-
     from osm_spark.pipeline import bloomindex as _bx
     from osm_spark.pipeline.table import SnapshotTable
 
@@ -10589,9 +10549,7 @@ def q_table_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("https://page.example/p"), F.col("doc_id").cast("string")
         ).alias("url"),
     )
-    t = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="osm_spark_bloomidx_")
-    )
+    t = SnapshotTable(spark, _table_dir("osm_spark_bloomidx_"))
     t.append(data.repartition(16, "doc_id"))
     blooms = _bx.build_file_blooms(t, "url")
     n_total = len(t.plan_files())
@@ -11369,8 +11327,6 @@ def q_table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     claims must be attested, not assumed); the data columns hash
     against a direct DuckDB recompute, so the gate checks the whole
     write -> stats -> prune -> read -> filter chain end to end."""
-    import tempfile
-
     from osm_spark.pipeline.table import SnapshotTable
     from osm_spark.pipeline.zorder import cluster_by_zorder
 
@@ -11382,7 +11338,7 @@ def q_table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiles.tile_y(pages.geo_lat("doc_id"), 10).alias("tile_y"),
     )
     t = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="osm_spark_zorder_"),
+        spark, _table_dir("osm_spark_zorder_"),
         stats_cols=("tile_x", "tile_y"),
     )
     t.append(cluster_by_zorder(pts, "tile_x", "tile_y", n_files=16))

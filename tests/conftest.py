@@ -1,6 +1,9 @@
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file belongs to, ahead of any other osm_spark on the path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pytest
 
@@ -11,6 +14,11 @@ def spark():
 
     s = get_spark("osm-spark-tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture(scope="session")
+def repo_root():
+    return ROOT
 
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -4,9 +4,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest
 from pyspark.sql import functions as F

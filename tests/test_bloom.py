@@ -3,10 +3,6 @@ shape; stratified sampling + sequence packing fixtures."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.text import bloom as bl

@@ -1,9 +1,5 @@
 """Content-defined chunking (text/cdc.py): losslessness + resync."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import hashlib
 
 from pyspark.sql import functions as F

@@ -8,10 +8,7 @@ vertices for arbitrary int64 segments.
 from __future__ import annotations
 
 import math
-import sys
 from fractions import Fraction
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 import pytest

@@ -1,10 +1,6 @@
 """Edit-distance join (text/editjoin.py) + label propagation
 (plans/labelprop.py) behavioral fixtures."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.plans.components import symmetrize

@@ -3,10 +3,6 @@ invariance, delay arithmetic."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from osm_spark.streaming import frontier as fr
 
 

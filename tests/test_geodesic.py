@@ -8,9 +8,6 @@ rings in (lat, lon) order.
 from __future__ import annotations
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -9,10 +9,6 @@ roundtrip the geohash_cell oracle relies on.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st

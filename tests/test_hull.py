@@ -7,10 +7,6 @@ plus the hull-of-hulls merge law that makes the reduction scale.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

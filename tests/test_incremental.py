@@ -1,9 +1,5 @@
 """IVM count maintenance (pipeline/incremental.py)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.pipeline.incremental import apply_count_delta, count_delta

@@ -3,10 +3,6 @@ semantics, tf scoring, tie order, salt invariance."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from osm_spark.text import index as ix
 
 

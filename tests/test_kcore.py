@@ -1,9 +1,5 @@
 """k-core peeling (plans/kcore.py): known-graph fixtures."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.plans.components import symmetrize

@@ -1,9 +1,5 @@
 """HMM map matching (geo/matching.py): path beats pointwise snap."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.geo.matching import viterbi_match

@@ -8,10 +8,6 @@ with the hand-computed wire expectations below.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
 from osm_spark.geo import mvt

@@ -4,9 +4,6 @@ smoothing floor for unseen words."""
 from __future__ import annotations
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from osm_spark.text import nbayes as nb
 

@@ -10,10 +10,6 @@ band but fails J >= 0.7 must NOT merge).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.plans import components as cc

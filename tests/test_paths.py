@@ -8,10 +8,6 @@ each round while the Spark side relaxes only from the changed set.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from osm_spark.plans import paths as pp
 
 

@@ -34,16 +34,20 @@ def test_h3_assign_single_python_boundary(spark):
     assert "ReadSchema: struct<doc_id:bigint>" in plan
 
 
-def test_pip_wkb_zero_shuffle(spark):
-    plan = _plan(spark, "pip_wkb")
-    assert "Exchange hashpartitioning" not in plan
-    assert _count(plan, "MapInPandas") == 1
-
-
-def test_pip_cells_adaptive_broadcasts_covering(spark):
-    plan = _plan(spark, "pip_cells_adaptive")
+def test_pip_cells_one_arrow_refine_no_point_shuffle(spark):
+    """The cell join's polygon side broadcasts, so no point is shuffled,
+    and the refine is the one Python node, an Arrow map."""
+    df = Q.SPARK_QUERIES["pip_cells"](spark, SF)
+    df.collect()  # AQE final plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    py_nodes = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+                "BatchEvalPython", "FlatMapGroupsInPandas")
+    assert sum(_count(plan, n) for n in py_nodes) == 1, plan
+    assert _count(plan, "MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "BroadcastHashJoin" in plan
-    assert _count(plan, "MapInPandas") == 1
+    assert "Exchange hashpartitioning" not in plan
 
 
 def test_simhash_neardup_no_per_band_recompute(spark):
@@ -130,11 +134,12 @@ def test_ivf_assign_arrow_matches_literal(spark):
 
 
 def test_pip_polygon_covering_boundary_only_refine(spark):
-    """The interior/boundary split: exactly ONE MapInPandas (the WKB
+    """The interior/boundary split: exactly ONE MapInArrow (the WKB
     refine over boundary cells); the interior branch is pure JVM, and
     the covering classify passes are Arrow UDFs over the frontier."""
     plan = _plan(spark, "pip_polygon_covering")
-    assert _count(plan, "MapInPandas") == 1
+    assert _count(plan, "MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "BatchEvalPython" not in plan
 
 
@@ -307,7 +312,8 @@ def test_round5_session3_plan_shapes(spark):
 
     # zonal_stats: exactly the designated ray-cast kernel, nothing else
     zs = _plan(spark, "zonal_stats")
-    assert _count(zs, "MapInPandas") == 1
+    assert _count(zs, "MapInArrow") == 1
+    assert "MapInPandas" not in zs
     assert "BatchEvalPython" not in zs
 
     # window_rollup / weighted_sample / hdr_quantiles: zero Python

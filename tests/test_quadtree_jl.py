@@ -1,9 +1,5 @@
 """Quadtree binning (geo/quadtree.py) + JL projection invariants."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.geo.quadtree import adaptive_bins

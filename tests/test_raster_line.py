@@ -3,9 +3,6 @@
 from __future__ import annotations
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from osm_spark.geo import raster_line as rl
 

@@ -9,9 +9,8 @@ fail — while integer widths are tolerated).
 
 from __future__ import annotations
 
+import os
 import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 import pandas as pd
@@ -20,6 +19,9 @@ import pytest
 import __spark_entry__ as E
 import osm_spark.queries as Q
 
+SCRIPTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
+)
 DRIVER_SLOTS = 50  # the driver's correctness gate checks the first 50
 
 _GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
@@ -82,7 +84,7 @@ def test_harness_canon_fails_on_float_vs_int_split():
     """A deliberately un-cast DuckDB HUGEINT sum (surfaces as float64)
     against a Spark-style int64 column must FAIL the local harness —
     this exact class shipped 3 red driver rows in round 3."""
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     from check_oracle import canon
 
     con = duckdb.connect()
@@ -100,9 +102,18 @@ def test_harness_canon_fails_on_float_vs_int_split():
 def test_harness_canon_tolerates_integer_widths():
     """The driver hash renders `26` identically from int32 and int64 —
     the harness must too (no false alarms on width-only splits)."""
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS)
     from check_oracle import canon
 
     a = canon(pd.DataFrame({"s": pd.array([26], dtype="int32")}))
     b = canon(pd.DataFrame({"s": pd.array([26], dtype="int64")}))
     pd.testing.assert_frame_equal(a, b, check_dtype=True, check_exact=True)
+
+
+def test_suite_imports_its_own_checkout(repo_root):
+    """The suite run from any checkout imports that checkout's package."""
+    import osm_spark
+
+    root = os.path.realpath(repo_root) + os.sep
+    for mod in (osm_spark, E):
+        assert os.path.realpath(mod.__file__).startswith(root), mod.__file__

@@ -3,9 +3,6 @@
 from __future__ import annotations
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest
 from pyspark.sql import functions as F

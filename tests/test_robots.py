@@ -3,10 +3,6 @@ longest-match precedence, Allow-wins-ties, wildcard/$ translation."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.text import robots as rb

@@ -1,9 +1,5 @@
 """SCD2 build (temporal/scd.py) + exact Jaccard join (text/setjoin.py)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.temporal.scd import scd2_build

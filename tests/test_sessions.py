@@ -3,9 +3,6 @@
 from __future__ import annotations
 
 import datetime as dt
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from osm_spark.streaming import sessions as ss
 

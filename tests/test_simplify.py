@@ -8,10 +8,6 @@ recursion and the DuckDB recursive CTE.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 import pytest
 from hypothesis import given, settings

@@ -3,9 +3,6 @@
 from __future__ import annotations
 
 import hashlib
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from osm_spark.text import sketch as sk
 

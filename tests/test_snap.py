@@ -10,9 +10,6 @@ and the supercover catches).
 from __future__ import annotations
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -176,3 +176,24 @@ def test_bloom_index_no_false_negatives_and_prunes(spark, tmp_path):
     # absent keys prune everything (w.h.p. at this fill factor —
     # deterministic given the md5 hash, so stable across runs)
     assert bx.plan_point_lookup(t, blooms, "u999999") == []
+
+
+def test_snapshot_queries_leave_one_table_dir(spark, sf_dir, tmp_path,
+                                             monkeypatch):
+    """A snapshot-table query builds a fresh table on every call, and the
+    next query invocation removes it: calling one query twice gives the
+    same rows and leaves one directory, and another query removes that."""
+    import tempfile
+
+    import osm_spark.queries as Q
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ("table_zorder_scan", "table_merge_scan"):
+        runs = [
+            sorted(map(tuple, Q.SPARK_QUERIES[name](spark, sf_dir).collect()))
+            for _ in range(2)
+        ]
+        assert runs[0] == runs[1]
+        assert len(list(tmp_path.iterdir())) == 1
+    Q.SPARK_QUERIES["tile_assign"](spark, sf_dir)
+    assert list(tmp_path.iterdir()) == []

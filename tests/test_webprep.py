@@ -3,10 +3,6 @@ signals, PII scrub, chunk dedup."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from osm_spark.text import webprep as wp

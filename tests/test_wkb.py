@@ -71,17 +71,18 @@ def test_roundtrip_random():
 def test_pip_wkb_hole_even_odd(spark):
     """A polygon with a hole, shipped as WKB: points in the hole are NOT
     matched (even-odd parity), points in the shell are."""
-    from osm_spark.geo.pip import pip_join_broadcast_wkb
+    from osm_spark.geo.pip import pip_join_polygon_covering
 
     shell = ([0.0, 10.0, 10.0, 0.0, 0.0], [0.0, 0.0, 10.0, 10.0, 0.0])
     hole = ([3.0, 7.0, 7.0, 3.0, 3.0], [3.0, 3.0, 7.0, 7.0, 3.0])
-    wkb = W.encode_polygon([shell, hole])
+    polys = spark.createDataFrame(
+        [(7, 0.0, 10.0, 0.0, 10.0, bytearray(W.encode_polygon([shell, hole])))],
+        "poly_id long, xmin double, xmax double, ymin double,"
+        " ymax double, wkb binary",
+    )
     pts = spark.createDataFrame(
         [(1, 1.0, 1.0), (2, 5.0, 5.0), (3, 8.5, 8.5), (4, 20.0, 20.0)],
         "doc_id long, lon double, lat double",
     )
-    got = {
-        r["doc_id"]
-        for r in pip_join_broadcast_wkb(pts, [(7, wkb)]).collect()
-    }
+    got = {r["doc_id"] for r in pip_join_polygon_covering(pts, polys, 3, 8).collect()}
     assert got == {1, 3}

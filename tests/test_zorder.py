@@ -1,9 +1,5 @@
 """Z-order clustering (pipeline/zorder.py): key law + layout payoff."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import tempfile
 
 from pyspark.sql import functions as F
