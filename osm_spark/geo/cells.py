@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm_spark.geo import distance, tiles
+from osm_spark.plans.skew import salted_topk
 
 EARTH_R_M = 6_371_000.0  # matches geo/distance.py haversine radius
 
@@ -249,12 +250,14 @@ def knn_kring(
         F.col(id_col).alias("neighbor"),
         distance.haversine_m("qlat", "qlon", "lat", "lon").alias("dist_m"),
     )
-    from osm_spark.similarity.ann import _salted_topk
-
-    ranked = _salted_topk(
-        scored, k, ["q"], [F.col("dist_m").asc(), F.col("neighbor")]
+    ranked = salted_topk(
+        scored, k, [F.col("dist_m").asc(), F.col("neighbor")],
+        F.col("neighbor"), 32, ["q"],
     )
-    return ranked.select(F.col("q").alias("qid"), "rank", "neighbor", "dist_m")
+    return ranked.select(
+        F.col("q").alias("qid"), F.col("rank").cast("int").alias("rank"),
+        "neighbor", "dist_m",
+    )
 
 
 # ---------------------------------------------------------- hex-cell kNN
@@ -467,9 +470,11 @@ def knn_hex(
         F.col(id_col).alias("neighbor"),
         distance.haversine_m("qlat", "qlon", "lat", "lon").alias("dist_m"),
     )
-    from osm_spark.similarity.ann import _salted_topk
-
-    ranked = _salted_topk(
-        scored, k, ["q"], [F.col("dist_m").asc(), F.col("neighbor")]
+    ranked = salted_topk(
+        scored, k, [F.col("dist_m").asc(), F.col("neighbor")],
+        F.col("neighbor"), 32, ["q"],
     )
-    return ranked.select(F.col("q").alias("qid"), "rank", "neighbor", "dist_m")
+    return ranked.select(
+        F.col("q").alias("qid"), F.col("rank").cast("int").alias("rank"),
+        "neighbor", "dist_m",
+    )

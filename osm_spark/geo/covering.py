@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo import tiles
+from osm_spark.geo.pip import polygon_covering_tiles
 
 
 def _intersects(x, y, z: int):
@@ -69,19 +70,6 @@ def _children4(cand: DataFrame) -> DataFrame:
     )
 
 
-def _seed_candidates(polygons: DataFrame, z: int) -> DataFrame:
-    """All tiles of each bbox's rectangle at the COARSEST zoom only —
-    the one place the full rectangle is enumerated; at z_min it is
-    O(1)-ish per polygon by construction."""
-    return polygons.withColumn(
-        "tile_x",
-        F.explode(F.sequence(tiles.tile_x("xmin", z), tiles.tile_x("xmax", z))),
-    ).withColumn(
-        "tile_y",
-        F.explode(F.sequence(tiles.tile_y("ymax", z), tiles.tile_y("ymin", z))),
-    )
-
-
 DISJOINT, BOUNDARY, FULL = 0, 1, 2
 
 
@@ -102,7 +90,7 @@ def _frontier(
     localCheckpoint), cutting the lineage. At z_max only the emit reads
     it, so it is materialized there only when every level is (the ring
     classify: a covering read twice downstream must not re-run it)."""
-    cand = _seed_candidates(polygons, z_min)
+    cand = polygon_covering_tiles(polygons, z_min)
     outs: list[DataFrame] = []
     for z in range(z_min, z_max + 1):
         cand = cand.withColumn("_cls", classify(z)).filter(
@@ -176,7 +164,7 @@ def covering_candidate_counts(
     """Replay the frontier recursion counting CANDIDATE rows per level
     (seed rectangle at z_min, then 4x the boundary frontier) — the
     work-bound diagnostic the O(perimeter) claim is tested against."""
-    cand = _seed_candidates(polygons, z_min)
+    cand = polygon_covering_tiles(polygons, z_min)
     counts: list[tuple[int, int]] = []
     for z in range(z_min, z_max + 1):
         cand = cand.localCheckpoint(eager=True)

@@ -13,9 +13,10 @@ default tile at (0, 0) swallowing null geocodes).
 Scale shape:
 
 - per-key counts: ONE map-side-combinable shuffle (|keys| rows out);
-- top-k: salted two-level row_number — per-salt-bucket prune to k,
-  then a k*salt-row final ranking, so no single reducer ever sorts
-  the full key population (the same shape as text/index.py _topk);
+- top-k: :func:`salted_topk`, the salted two-level row_number every
+  top-k in this engine runs — per-salt-bucket prune to k, then a
+  k*salt-row final ranking, so no single reducer ever sorts the full
+  key population;
 - the distribution stats (distinct keys, max, total) are one more
   aggregation over the counts frame, and the count-of-count
   quantiles ride the bounded-histogram trick from text/quantiles.py
@@ -30,6 +31,37 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def salted_topk(
+    df: DataFrame,
+    k: int,
+    order: Sequence,
+    salt_key,
+    salt: int,
+    part_cols: Sequence[str] = (),
+) -> DataFrame:
+    """The top ``k`` rows of each ``part_cols`` group (of the whole
+    frame when there are none) by ``order``, numbered 1..k in the long
+    column ``rank``.
+
+    Two levels: rows first rank within (group, ``salt_key`` mod
+    ``salt``) buckets and keep <= k each, then the <= salt*k survivors
+    per group rank again — a hot group, or a global ranking, never
+    sorts its full row set in one reducer task. Exact whatever the
+    salt when ``order`` is total: a row outside its bucket's top k has
+    k rows ahead of it in its group."""
+    salted = df.withColumn("_salt", F.pmod(salt_key, F.lit(salt)).cast("int"))
+    w1 = Window.partitionBy(*part_cols, "_salt").orderBy(*order)
+    pruned = (
+        salted.withColumn("_lr", F.row_number().over(w1))
+        .filter(F.col("_lr") <= k)
+        .drop("_lr", "_salt")
+    )
+    w2 = Window.partitionBy(*part_cols).orderBy(*order)
+    return pruned.withColumn(
+        "rank", F.row_number().over(w2).cast("long")
+    ).filter(F.col("rank") <= k)
 
 
 def key_counts(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
@@ -61,20 +93,7 @@ def skew_profile(
     key_id = F.concat_ws("", *[F.col(c).cast("string")
                                      for c in key_cols])
     order = [F.col("n").desc(), *[F.col(c).asc() for c in key_cols]]
-    salted = counts.withColumn(
-        "_salt", F.pmod(F.xxhash64(key_id), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.orderBy(*order)
-    top = (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    top = salted_topk(counts, k, order, F.xxhash64(key_id), salt)
     stats = counts.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),
         F.sum("n").cast("long").alias("total"),

@@ -7483,25 +7483,14 @@ def q_tile_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = terms.groupBy("tile_x", "tile_y", "term").agg(
         F.count("*").alias("n")
     )
-    salted = tf.withColumn(
-        "_salt", F.pmod(F.xxhash64("term"), F.lit(16)).cast("int")
+    from osm_spark.plans.skew import salted_topk
+
+    top = salted_topk(
+        tf, _TTK_K, [F.col("n").desc(), F.col("term").asc()],
+        F.xxhash64("term"), 16, ["tile_x", "tile_y"],
     )
-    w1 = Window.partitionBy("tile_x", "tile_y", "_salt").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    pre = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .where(F.col("_lr") <= _TTK_K)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("tile_x", "tile_y").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    return (
-        pre.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= _TTK_K)
-        .select("tile_x", "tile_y", F.col("rank").cast("int").alias("rank"),
-                "term", "n")
+    return top.select(
+        "tile_x", "tile_y", F.col("rank").cast("int").alias("rank"), "term", "n"
     )
 
 
@@ -9984,31 +9973,35 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k word types cover, at k in {5, 10, 20, 40} — the diagnostic
     every tokenizer-vocabulary and stopword-list decision reads first
     (Zipfian corpora saturate fast; the curve's knee sizes the vocab).
-    ONE word-keyed count (vocabulary-sized from then on), one global
-    rank/cumsum window over the distinct-word table — a bounded frame
-    at any corpus size, the same single-partition-window-over-tiny-
-    frame discipline as BPE's merge ranking — and a 4-row k join.
-    Deterministic (freq desc, word asc) total order; integer
-    fixed-point shares; the oracle replays rank, running sum and the
-    per-k max."""
+    ONE word-keyed count (vocabulary-sized from then on), the salted
+    two-level top-k (plans/skew.py) down to the largest k, a running
+    sum over those <= 40 rows, and a 4-row k join. Deterministic
+    (freq desc, word asc) total order; integer fixed-point shares; the
+    oracle replays rank, running sum and the per-k max."""
+    from osm_spark.plans.skew import salted_topk
+
     wf = (
         _t(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
-    w = Window.orderBy(F.desc("freq"), F.asc("word"))
-    r = wf.select(
+    k_values = [5, 10, 20, 40]
+    top = salted_topk(
+        wf, max(k_values), [F.desc("freq"), F.asc("word")],
+        F.xxhash64("word"), 8,
+    )
+    r = top.select(
         "word", "freq",
-        F.row_number().over(w).alias("rk"),
+        F.col("rank").alias("rk"),
         F.sum("freq").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
+            Window.orderBy("rank").rowsBetween(Window.unboundedPreceding, 0)
         ).alias("cum"),
     ).crossJoin(
         F.broadcast(wf.agg(F.sum("freq").alias("tot")))
     )
     ks = F.broadcast(
-        spark.createDataFrame([(5,), (10,), (20,), (40,)], ["k"])
+        spark.createDataFrame([(k,) for k in k_values], ["k"])
     )
     return (
         r.join(ks, r["rk"] <= ks["k"])

@@ -16,9 +16,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from osm_spark.plans.skew import salted_topk
 
 
 def cosine_expr(a, b) -> Column:
@@ -54,26 +56,6 @@ def _batch_topk(ids: np.ndarray, cos: np.ndarray, qid: int, k: int):
     return ids[order], cos[order]
 
 
-def _salted_topk(scored: DataFrame, k: int, part_cols: list[str], order, salt: int = 32) -> DataFrame:
-    """Two-level top-k: local rank within (keys, salt) buckets cuts each
-    partition to <= k rows, then the global rank runs over <= salt*k rows
-    per key — the final window never funnels the full score set into
-    |keys| reducer tasks."""
-    sdf = scored.withColumn(
-        "_salt", F.pmod(F.col("neighbor"), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy(*part_cols, "_salt").orderBy(*order)
-    sdf = (
-        sdf.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy(*part_cols).orderBy(*order)
-    return sdf.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: list[tuple[int, list[float]]],
@@ -88,7 +70,8 @@ def brute_force_topk(
     Scale shape: the mapInPandas stage emits at most k rows per (query,
     batch) — exact partial top-k with boundary-tie handling — so the
     shuffle is k x |queries| x n_batches rows, not |corpus| x |queries|.
-    The final ranking is a salted two-level window (see _salted_topk)."""
+    The final ranking is a salted two-level window (plans/skew.py
+    salted_topk)."""
     spark = corpus.sparkSession
     qids = [int(q) for q, _ in queries]
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
@@ -126,10 +109,11 @@ def brute_force_topk(
             )
 
     scored = corpus.select(id_col, vec_col).mapInPandas(score, schema=schema)
-    ranked = _salted_topk(
-        scored, k, ["q"], [F.col("cos").desc(), F.col("neighbor")]
+    ranked = salted_topk(
+        scored, k, [F.col("cos").desc(), F.col("neighbor")],
+        F.col("neighbor"), 32, ["q"],
     )
-    return ranked.select("q", "rank", "neighbor")
+    return ranked.select("q", F.col("rank").cast("int").alias("rank"), "neighbor")
 
 
 def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
@@ -297,8 +281,9 @@ def ivf_search(
     scored = cand.select(
         "q", F.col(id_col).alias("neighbor"), cos.alias("cos")
     )
-    ranked = _salted_topk(
-        scored, k, ["q"], [F.col("cos").desc(), F.col("neighbor")]
+    ranked = salted_topk(
+        scored, k, [F.col("cos").desc(), F.col("neighbor")],
+        F.col("neighbor"), 32, ["q"],
     )
     return ranked.withColumn("rank", F.col("rank").cast("int")).select(
         "q", "rank", "neighbor"

@@ -28,6 +28,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.plans.skew import salted_topk
+
 QUANT = 1000
 
 
@@ -212,9 +214,8 @@ def trained_ivf_topk(
         lambda acc, x: acc + x,
     )
     scored = cand.select("q", F.col("_id").alias("neighbor"), d2.alias("d2"))
-    from osm_spark.similarity.ann import _salted_topk
-
-    ranked = _salted_topk(
-        scored, topk, ["q"], [F.col("d2").asc(), F.col("neighbor")]
+    ranked = salted_topk(
+        scored, topk, [F.col("d2").asc(), F.col("neighbor")],
+        F.col("neighbor"), 32, ["q"],
     )
     return ranked.select("q", F.col("rank").cast("int").alias("rank"), "neighbor")

@@ -20,9 +20,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.plans.skew import salted_topk
 from osm_spark.similarity.kmeans import QUANT, kmeans_quantized
 
 
@@ -100,18 +101,6 @@ def adc_topk(
         score = term if score is None else score + term
     scored = codes.withColumn("adc", score.cast("long")).select(id_col, "adc")
     order = [F.col("adc").asc(), F.col(id_col).asc()]
-    salted = scored.withColumn(
-        "_salt", F.pmod(F.col(id_col), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy().orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "adc")
+    return salted_topk(scored, k, order, F.col(id_col), salt).select(
+        id_col, "rank", "adc"
     )

@@ -13,10 +13,10 @@ is a priority score instead of a sequence number.
 
 Spark-first shape, sized for a 10^12-row frontier:
 
-- **Per-host top-B is a salted two-level window** (same discipline as
-  similarity/ann.py `_salted_topk`): rank within (host, salt-of-url)
-  first, which caps every partition's sort at B rows per (host, salt)
-  bucket, then rank the <= salt*B survivors per host.  A hot host with
+- **Per-host top-B is a salted two-level window** (plans/skew.py
+  `salted_topk`, shared by every top-k here): rank within (host,
+  salt-of-url) first, which caps every partition's sort at B rows per
+  (host, salt) bucket, then rank the <= salt*B survivors per host.  A hot host with
   10^9 frontier URLs never funnels them into one reducer task — the
   exact failure a naive `row_number() OVER (PARTITION BY host)` hits
   at scale.  The two-level result is exact (slot = true per-host rank)
@@ -37,8 +37,10 @@ Spark-first shape, sized for a 10^12-row frontier:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.plans.skew import salted_topk
 
 
 def schedule(
@@ -57,25 +59,19 @@ def schedule(
     delay(host) = 1 + length(host) % 3 stands in for the host's
     robots crawl-delay directive.
     """
-    f = frontier.select(host_col, url_col, prio_col).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt)).cast("int")
+    kept = salted_topk(
+        frontier.select(host_col, url_col, prio_col),
+        budget,
+        [F.col(prio_col).desc(), F.col(url_col).asc()],
+        F.xxhash64(F.col(url_col)),
+        salt,
+        [host_col],
     )
-    order = [F.col(prio_col).desc(), F.col(url_col).asc()]
-    w1 = Window.partitionBy(host_col, "_salt").orderBy(*order)
-    pruned = (
-        f.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= budget)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy(host_col).orderBy(*order)
-    kept = pruned.withColumn(
-        "slot", F.row_number().over(w2).cast("long")
-    ).filter(F.col("slot") <= budget)
     delay = (F.lit(1) + F.pmod(F.length(host_col), F.lit(3))).cast("long")
     return kept.select(
         host_col,
         url_col,
         F.col(prio_col).cast("long").alias("prio"),
-        "slot",
-        ((F.col("slot") - 1) * delay).alias("fetch_at_s"),
+        F.col("rank").alias("slot"),
+        ((F.col("rank") - 1) * delay).alias("fetch_at_s"),
     )

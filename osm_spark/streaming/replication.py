@@ -104,9 +104,10 @@ def stream_changes(
 
     ``source_df`` must be a streaming DataFrame with CHANGE_SCHEMA.
     State lives in a hash-BUCKETED store (state_store.py): a batch
-    rewrites only the buckets its keys hash into and commits via one
-    atomic pointer rename — O(|batch| + touched buckets) per batch,
-    never O(|state|), and no half-overwritten window (a crash before
+    rewrites whole every bucket its keys hash into and commits via one
+    atomic pointer rename — O(|batch| + |state| * touched / n_buckets)
+    per batch, about O(|state|) once the batch has more distinct keys
+    than buckets, and no half-overwritten window (a crash before
     the rename leaves the previous committed state intact; Spark's
     checkpoint replays the batch, so actions are at-least-once — dedupe
     downstream on (batch_id, seq, type, id, new_version) if exactly-

@@ -5,10 +5,14 @@ rows hash into ``n_buckets`` by key, each bucket lives in versioned
 parquet directories, and a single JSON pointer file (STATE.json) maps
 bucket -> committed version directory. One micro-batch:
 
-1. bucket the batch, find the TOUCHED bucket set (<= n_buckets, usually
-   far fewer) — the only buckets that rewrite; untouched buckets carry
-   their committed pointer forward, so batch cost is
-   O(|batch| + |touched buckets|), never O(|state|);
+1. bucket the batch, find the TOUCHED bucket set (<= n_buckets) — the
+   only buckets that rewrite; untouched buckets carry their committed
+   pointer forward. A touched bucket is read and rewritten whole, so
+   batch cost is O(|batch| + |state| * touched / n_buckets). Keys hash
+   uniformly, so a batch with many more distinct keys than buckets
+   touches nearly all of them and rewrites about the whole state (500
+   random keys over the default 16 buckets touch all 16); only batches
+   of few keys, or keys clustered in few buckets, stay below O(|state|);
 2. merge old-touched-buckets UNION batch through the key-wise merge in
    ONE Spark job, written ``partitionBy(bucket)`` into a fresh epoch
    directory (never overwriting committed data);

@@ -17,7 +17,8 @@ slots with the child versions on ``ref`` once. Distribution is by child
 ref — exactly the reference's ``mapChildLocs`` inverted index
 (compute.go:200-218) realized as a shuffle key. Each ref is routed in
 that one partitioning: modern refs by window aggregates in the JVM, the
-pre-2012 tail by the branchy kernel per ref with its full version
+pre-2012 tail (and, with error surfacing, the refs that can produce an
+'error' row) by the branchy kernel per ref with its full version
 history and every (parent, slot) referencing it. Groups are tiny (one
 element's history), so the per-group Python is bounded.
 """
@@ -165,104 +166,6 @@ _OUT_SCHEMA = StructType(
 )
 
 
-def _fast_path(refs_pdf, child_pdf, out, ignore_inconsistency):
-    """Vectorized kernel for the dominant modern case: every child and
-    parent committed on/after CommitInfoStart AND child committed
-    nondecreasing in version order (then FindVisible degenerates to
-    'last committed <= at', a searchsorted — types.go:101-104). Returns
-    True if it handled the group, False to fall back to the branch-exact
-    python loop."""
-    import numpy as np
-
-    cis = np.datetime64(COMMIT_INFO_START, "ns")
-    C = child_pdf["committed"].to_numpy(dtype="datetime64[ns]")
-    if len(C) == 0 or np.isnat(C).any() or (C < cis).any():
-        return False
-    if not (C[:-1] <= C[1:]).all():
-        return False
-    PC = refs_pdf["parent_committed"].to_numpy(dtype="datetime64[ns]")
-    if np.isnat(PC).any() or (PC < cis).any():
-        return False
-    NC = refs_pdf["next_committed"].to_numpy(dtype="datetime64[ns]")
-    has_next = ~refs_pdf["next_ts"].isna().to_numpy()
-    if (has_next & (np.isnat(NC) | (NC < cis))).any():
-        return False
-
-    VIS = child_pdf["visible"].to_numpy(dtype=bool)
-    if "reverse" in child_pdf.columns:
-        REV = child_pdf["reverse"].fillna(False).to_numpy(dtype=bool)
-    else:
-        REV = np.zeros(len(VIS), dtype=bool)
-    CV = child_pdf["version"].to_numpy()
-    CCS = child_pdf["changeset"].to_numpy()
-    CLAT = child_pdf["lat"].to_numpy(dtype=float)
-    CLON = child_pdf["lon"].to_numpy(dtype=float)
-    CTS = child_pdf["ts"].to_numpy(dtype="datetime64[ns]")
-    # shared/child.go:105-111 update timestamp
-    UTS = np.where(CTS < cis, CTS, C)
-    n = len(C)
-
-    # one row per parent, idx slots aggregated
-    pid_a = refs_pdf["pid"].to_numpy()
-    pver_a = refs_pdf["parent_version"].to_numpy()
-    pts_a = refs_pdf["parent_ts"].to_numpy(dtype="datetime64[ns]")
-    pvis_a = refs_pdf["parent_visible"].to_numpy(dtype=bool)
-    idx_a = refs_pdf["idx"].to_numpy()
-
-    pick = np.searchsorted(C, PC, side="right") - 1
-    pick_ok = (pick >= 0) & VIS[np.clip(pick, 0, n - 1)]
-
-    nv = np.full(len(PC), n, dtype=np.int64)
-    if has_next.any():
-        na = NC
-        nidx = np.searchsorted(C, na, side="right") - 1
-        n_ok = (nidx >= 0) & VIS[np.clip(nidx, 0, n - 1)]
-        # visible next pick: +1 if strictly before next parent commit
-        nv_next = nidx + (C[np.clip(nidx, 0, n - 1)] < na)
-        # no visible next pick: 0 if pick within threshold of next parent,
-        # else last strictly-before + 1 (== searchsorted left)
-        vb = np.searchsorted(C, na, side="left")
-        cond_zero = pick_ok & ~(na > C[np.clip(pick, 0, n - 1)])
-        nv_nonext = np.where(cond_zero, 0, vb)
-        nv = np.where(has_next, np.where(n_ok, nv_next, nv_nonext), nv)
-
-    start = np.where(pick_ok, pick + 1, np.searchsorted(C, PC, side="left"))
-
-    # group slots per parent (parents already sorted)
-    key = np.empty(len(pid_a), dtype=object)
-    boundaries = np.flatnonzero(
-        np.r_[True, (pid_a[1:] != pid_a[:-1]) | (pver_a[1:] != pver_a[:-1])
-              | (pts_a[1:] != pts_a[:-1])]
-    )
-    bounds = list(boundaries) + [len(pid_a)]
-    for gi in range(len(bounds) - 1):
-        s0, s1 = bounds[gi], bounds[gi + 1]
-        if not pvis_a[s0]:
-            continue
-        pid, pver = int(pid_a[s0]), int(pver_a[s0])
-        pts = pd.Timestamp(pts_a[s0])
-        idxs = [int(i) for i in idx_a[s0:s1]]
-        p = pick[s0]
-        if pick_ok[s0]:
-            for i in idxs:
-                out.append((pid, pver, pts, i, "set", int(CV[p]), int(CCS[p]),
-                            float(CLAT[p]), float(CLON[p]), None, None))
-        elif not ignore_inconsistency:
-            out.append((pid, pver, pts, idxs[0], "error",
-                        None, None, None, None, None, None))
-            continue
-        for k in range(int(start[s0]), int(nv[s0])):
-            if VIS[k]:
-                for i in idxs:
-                    out.append((pid, pver, pts, i, "update", int(CV[k]),
-                                int(CCS[k]), float(CLAT[k]), float(CLON[k]),
-                                pd.Timestamp(UTS[k]), bool(REV[k])))
-            elif not ignore_inconsistency:
-                out.append((pid, pver, pts, idxs[0], "error", int(CV[k]),
-                            None, None, None, None, None))
-    return True
-
-
 def _make_kernel(threshold_sec: float, ignore_inconsistency: bool):
     eps = pd.Timedelta(seconds=threshold_sec)
 
@@ -271,20 +174,6 @@ def _make_kernel(threshold_sec: float, ignore_inconsistency: bool):
         # Build the sorted ChildList (datasource.go:114-149: sort by
         # version, assign 0-based VersionIndex).
         child_pdf = child_pdf.sort_values("version").reset_index(drop=True)
-        # eps/threshold never enters the post-CommitInfoStart branches
-        # (types.go:101-104), so the fast path is valid for any threshold.
-        if len(child_pdf) and len(refs_pdf):
-            sorted_refs = refs_pdf.sort_values(
-                ["pid", "parent_version", "parent_ts", "idx"]
-            ).reset_index(drop=True)
-            if _fast_path(sorted_refs, child_pdf, out, ignore_inconsistency):
-                return pd.DataFrame(
-                    out,
-                    columns=["pid", "parent_version", "parent_ts", "idx", "kind",
-                             "child_version", "child_changeset", "lat", "lon",
-                             "uts", "reverse"],
-                )
-            out = []
         has_rev = "reverse" in child_pdf.columns
         children = [
             _Child(
@@ -417,7 +306,7 @@ def _slots(parents: DataFrame, child_filter=None) -> DataFrame:
 def _fast_rows(j: DataFrame) -> DataFrame:
     """The post-CommitInfoStart path of FindVisible/nextVersionIndex
     (types.go:101-104, compute.go:145-197) over the joined (slot, child)
-    rows, equal to ``_fast_path``:
+    rows, equal to the kernel's on the refs it is given:
 
     - ``pick`` = last child committed <= the parent's commit (window
       aggregate per slot); a visible pick is the slot's 'set' row
@@ -427,11 +316,12 @@ def _fast_rows(j: DataFrame) -> DataFrame:
     Valid only for refs where every relevant commit timestamp is known,
     >= CommitInfoStart, and nondecreasing in version order. Then the
     children committed at or before a time are a prefix of ``vidx``,
-    so ``_fast_path``'s searchsorted bounds are row comparisons:
-    ``start`` is the first child committed after the parent (at it too
-    when the pick is not visible), and ``nv`` the first committed at or
-    after the next parent, or ``nxt`` if that is later and visible.
-    Emits no 'error' rows."""
+    so the kernel's version scans reduce to row comparisons: ``start``
+    is the first child committed after the parent (at it too when the
+    pick is not visible), and ``nv`` the first committed at or after
+    the next parent, or ``nxt`` if that is later and visible. Emits no
+    'error' rows, so with error surfacing it is given only refs that
+    cannot produce one."""
     cis = F.lit(COMMIT_INFO_START.to_pydatetime())
     C, PC, NC = F.col("committed"), F.col("parent_committed"), F.col("next_committed")
     vidx = F.col("vidx")
@@ -466,8 +356,9 @@ def _fast_rows(j: DataFrame) -> DataFrame:
 
 
 def _routed_kernel(kernel):
-    """Adapts the cogroup kernel to one ref's joined (slot, child) rows:
-    the slot x child product is split back into its two sides."""
+    """Adapts the ``(refs_pdf, child_pdf)`` kernel to one ref's joined
+    (slot, child) rows: the slot x child product is split back into its
+    two sides."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         refs = pdf[_SLOT_COLS].drop_duplicates(
@@ -508,27 +399,26 @@ def annotate_refs(
     way.go:111-120) and kind='update' the minor versions between parent
     versions.
 
-    Plan: one keyed pass. Slots and child versions are joined on
-    ``ref`` once; a window over each ref flags it slow when any of its
-    commit metadata is pre-CommitInfoStart, unknown or non-monotone.
-    Modern refs are answered in the JVM (:func:`_fast_rows`); slow
-    refs — the pre-2012 eps-threshold tail — run the branch-exact
-    Python kernel per ref over the same partitioning, so the plan has
-    one Python node and no extra shuffle. ``ignore_inconsistency=False``
-    (error surfacing) sends everything through the cogrouped kernel.
+    ``ignore_inconsistency=False`` adds kind='error' rows: a visible
+    parent with no visible child as of its commit, or an invisible
+    child version between two parent versions.
+
+    Plan: one keyed pass for both settings. Slots and child versions
+    are joined on ``ref`` once; a window over each ref flags it slow
+    when any of its commit metadata is pre-CommitInfoStart, unknown or
+    non-monotone, and, with error surfacing, when it can produce an
+    'error' row. Modern refs are answered in the JVM
+    (:func:`_fast_rows`); slow refs — the pre-2012 eps-threshold tail
+    and the refs with errors — run the branch-exact Python kernel per
+    ref over the same partitioning, so the plan has one Python node and
+    no extra shuffle.
     """
     p = _slots(parents, child_filter)
     kernel = _make_kernel(threshold_sec, ignore_inconsistency)
-    if not ignore_inconsistency:
-        return (
-            p.groupBy("ref")
-            .cogroup(children.groupBy("ref"))
-            .applyInPandas(kernel, schema=_OUT_SCHEMA)
-        )
-
-    # a ref is slow exactly when ``_fast_path`` would decline it: a child
-    # or (next) parent commit time unknown or before CommitInfoStart, or
-    # child commit times decreasing in version order
+    # a ref is slow when its versions are not ordered by commit time as
+    # FindVisible's post-CommitInfoStart branch needs: a child or (next)
+    # parent commit time unknown or before CommitInfoStart, or child
+    # commit times decreasing in version order
     cis = F.lit(COMMIT_INFO_START.to_pydatetime())
     wc = Window.partitionBy("ref").orderBy("version")
     C = F.col("committed")
@@ -545,9 +435,16 @@ def annotate_refs(
         PC.isNull() | (PC < cis)
         | (F.col("next_ts").isNotNull() & (NC.isNull() | (NC < cis)))
     )
-    j = p.join(ch, "ref").withColumn(
-        "_slow", F.max(F.col("_bad") | slot_bad).over(Window.partitionBy("ref"))
-    )
+    wr = Window.partitionBy("ref")
+    is_slow = F.max(F.col("_bad") | slot_bad).over(wr)
+    if not ignore_inconsistency:
+        # the only sources of 'error' rows: an invisible (or NULL)
+        # version, or a visible parent committed before every version
+        first_pc = F.min(F.when(F.col("parent_visible"), PC)).over(wr)
+        no_pick = first_pc < F.min(C).over(wr)
+        all_visible = F.min(F.coalesce("visible", F.lit(False))).over(wr)
+        is_slow = is_slow | ~all_visible | F.coalesce(no_pick, F.lit(False))
+    j = p.join(ch, "ref").withColumn("_slow", is_slow)
     slow = (
         j.where("_slow")
         .select(*_SLOT_COLS, *_CHILD_COLS, "vidx")

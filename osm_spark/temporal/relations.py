@@ -2,7 +2,7 @@
 annotate/relation.go:24-129) on Spark.
 
 Children are typed (node / way / relation member histories), keyed by
-the packed FeatureID so one cogroup kernel serves all three types
+the packed FeatureID so one keyed annotation pass serves all three types
 (relationDatasource.Get, annotate/datasource.go:67-98). Way children
 carry a ``reverse`` flag — IsReverse between consecutive way versions
 (datasource.go:155-172) — which surfaces on minor-version updates.

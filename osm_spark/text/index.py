@@ -19,9 +19,9 @@ Spark-first shape, sized for a 10^12-document corpus:
   the postings stream; conjunctive semantics are a (qid, doc) count
   filter (`n_matched == n_terms`, exact because postings hold one row
   per (term, doc)); scoring is the tf sum in the SAME aggregation.
-- **Ranking = salted two-level top-k** (same discipline as
-  similarity/ann.py and streaming/frontier.py): a stopword-heavy query
-  matches a huge fraction of the corpus, and a plain
+- **Ranking = salted two-level top-k** (plans/skew.py `salted_topk`,
+  shared with similarity/ann.py and streaming/frontier.py): a
+  stopword-heavy query matches a huge fraction of the corpus, and a plain
   `row_number() OVER (PARTITION BY qid)` would funnel all of it into
   one reducer task.  Salting is execution-only; ties break by the
   (score DESC, doc_id ASC) total order so both engines agree exactly.
@@ -29,9 +29,10 @@ Spark-first shape, sized for a 10^12-document corpus:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.plans.skew import salted_topk
 from osm_spark.text.dedup import words
 
 
@@ -45,34 +46,6 @@ def build_postings(
         docs.select(F.col(id_col), F.explode(words(text_col)).alias("term"))
         .groupBy("term", id_col)
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-
-
-def _topk(
-    hits: DataFrame,
-    id_col: str,
-    score_col: str,
-    k: int,
-    salt: int,
-    descending: bool = True,
-) -> DataFrame:
-    """Salted two-level top-k per qid by (score, id) total order."""
-    s = F.col(score_col)
-    order = [s.desc() if descending else s.asc(), F.col(id_col).asc()]
-    salted = hits.withColumn(
-        "_salt", F.pmod(F.col(id_col), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("qid", "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("qid").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", id_col, score_col)
     )
 
 
@@ -143,7 +116,10 @@ def bm25_search(
         .groupBy("qid", id_col)
         .agg(F.sum("term_e6").cast("long").alias("score_e6"))
     )
-    return _topk(hits, id_col, "score_e6", k, salt, descending=True)
+    order = [F.col("score_e6").desc(), F.col(id_col).asc()]
+    return salted_topk(hits, k, order, F.col(id_col), salt, ["qid"]).select(
+        "qid", "rank", id_col, "score_e6"
+    )
 
 
 def search(
@@ -178,20 +154,8 @@ def search(
         .filter(F.col("n_matched") == F.col("n_terms"))
     )
     order = [F.col("score").desc(), F.col(id_col).asc()]
-    salted = hits.withColumn(
-        "_salt", F.pmod(F.col(id_col), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("qid", "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("qid").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", id_col, "score")
+    return salted_topk(hits, k, order, F.col(id_col), salt, ["qid"]).select(
+        "qid", "rank", id_col, "score"
     )
 
 

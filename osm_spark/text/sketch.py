@@ -27,8 +27,10 @@ Scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.plans.skew import salted_topk
 
 TWO60 = 1 << 60
 
@@ -51,22 +53,9 @@ def kmv_sketch(
     d = items.select(
         F.col(group_col).alias("grp"), F.md5(item_col).alias("dig")
     ).distinct()
-    order = [F.col("dig").asc()]
-    salted = d.withColumn(
-        "_salt", F.pmod(F.xxhash64("dig"), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("grp", "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("grp").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(F.col("grp").alias(group_col), "rank", "dig")
-    )
+    return salted_topk(
+        d, k, [F.col("dig").asc()], F.xxhash64("dig"), salt, ["grp"]
+    ).select(F.col("grp").alias(group_col), "rank", "dig")
 
 
 def kmv_estimate(sketch: DataFrame, group_col: str, k: int = 16) -> DataFrame:

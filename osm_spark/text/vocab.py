@@ -19,16 +19,17 @@ training corpus-size-independent per iteration:
   stays in whole-stage codegen.  The same guarded-sequence discipline
   as contamination.py (Spark's ``sequence`` descends on a negative
   span).
-- The ranking window is global but runs over the distinct-PAIR table
-  (bounded by alphabet², thousands of rows at any corpus size) — a
-  single-partition window over a provably tiny frame, not a scale
-  hazard.
+- The ranking is the salted two-level top-k (plans/skew.py
+  `salted_topk`): the distinct-PAIR table prunes to k rows per salt
+  bucket first, so the one global window sorts at most salt*k rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.plans.skew import salted_topk
 
 
 def word_freq(docs: DataFrame, text_col: str) -> DataFrame:
@@ -57,11 +58,9 @@ def pair_counts(wf: DataFrame) -> DataFrame:
 def top_merges(pc: DataFrame, k: int = 20) -> DataFrame:
     """Top-k merge candidates, deterministically ranked (count desc,
     pair asc — the tie rule makes both engines pick identical ranks)."""
-    w = Window.orderBy(F.desc("n"), F.asc("pair"))
-    return (
-        pc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("rank", "pair", "n")
+    order = [F.desc("n"), F.asc("pair")]
+    return salted_topk(pc, k, order, F.xxhash64("pair"), 8).select(
+        F.col("rank").cast("int").alias("rank"), "pair", "n"
     )
 
 

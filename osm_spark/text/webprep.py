@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm_spark.plans.skew import salted_topk
 from osm_spark.text.dedup import shingles, words
 
 
@@ -435,19 +436,8 @@ def weighted_sample(docs: DataFrame, id_col: str, stratum_col: str,
     never funnels one reducer); adds ``rank`` 1..k per stratum."""
     p = docs.withColumn("_pq", es_priority_q(id_col, weight_col))
     order = [F.col("_pq").asc(), F.col(id_col).asc()]
-    salted = p.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)).cast("int")
-    )
-    w1 = Window.partitionBy(stratum_col, "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy(stratum_col).orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
+    return salted_topk(
+        p, k, order, F.xxhash64(F.col(id_col)), salt_buckets, [stratum_col]
     )
 
 

@@ -5,6 +5,8 @@ at the given sf dir, compares row count, column names, and
 order-insensitive values. Usage:
 
     python scripts/check_oracle.py [sf_dir] [query ...]
+
+Exits 2 without starting Spark when a named query is not registered.
 """
 
 from __future__ import annotations
@@ -51,6 +53,12 @@ def main() -> int:
     import __spark_entry__ as E
     from osm_spark.session import get_spark
 
+    qs = E.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # a typo or a deregistered name must not read as "0/0 match"
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark("oracle-check")
 
     con = duckdb.connect()
@@ -62,7 +70,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
     checked = 0

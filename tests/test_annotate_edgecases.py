@@ -279,8 +279,9 @@ def mixed_fixture(spark):
     return wdf, ndf
 
 
-def _forced_kernel_rows(wdf, ndf):
-    """Every ref through the branch-exact kernel, as one cogroup."""
+def _forced_kernel_rows(wdf, ndf, ignore_inconsistency=True):
+    """Every ref through the branch-exact kernel, as one cogroup, and
+    the rows of the routed keyed pass."""
     from pyspark.sql import functions as F
 
     from osm_spark.temporal import annotate as A
@@ -294,10 +295,14 @@ def _forced_kernel_rows(wdf, ndf):
     forced = (
         A._slots(parents).groupBy("ref")
         .cogroup(children.groupBy("ref"))
-        .applyInPandas(A._make_kernel(A.DEFAULT_THRESHOLD_SEC, True),
-                       schema=A._OUT_SCHEMA)
+        .applyInPandas(
+            A._make_kernel(A.DEFAULT_THRESHOLD_SEC, ignore_inconsistency),
+            schema=A._OUT_SCHEMA,
+        )
     )
-    routed = A.annotate_refs(parents, children, ignore_inconsistency=True)
+    routed = A.annotate_refs(
+        parents, children, ignore_inconsistency=ignore_inconsistency
+    )
     return forced.collect(), routed.collect()
 
 
@@ -312,6 +317,25 @@ def test_routed_annotation_matches_kernel_on_mixed_fixture(spark):
     # both routes produce output: an all-modern way and a pre-2012 one
     assert kinds[(301, "set")] and kinds[(400, "set")]
     assert sum(n for (_, k), n in kinds.items() if k == "update") > 10
+
+
+def test_error_surfacing_matches_kernel_on_mixed_fixture(spark):
+    """With ignore_inconsistency=False the keyed pass routes every ref
+    that can produce an 'error' row to the kernel: it returns exactly
+    the rows of the kernel run on every ref, 'error' rows included."""
+    from collections import Counter
+
+    forced, routed = _forced_kernel_rows(
+        *mixed_fixture(spark), ignore_inconsistency=False
+    )
+    assert Counter(map(tuple, routed)) == Counter(map(tuple, forced))
+    kinds = Counter(r.kind for r in forced)
+    assert kinds["error"] and kinds["set"] and kinds["update"]
+    # errors from both sources: no pick as of the parent's commit (no
+    # child version) and an invisible version between parent versions
+    errs = [r for r in forced if r.kind == "error"]
+    assert any(r.child_version is None for r in errs)
+    assert any(r.child_version is not None for r in errs)
 
 
 def test_annotate_ways_nulls_on_mixed_fixture(spark):
@@ -353,9 +377,10 @@ def test_annotate_ways_nulls_on_mixed_fixture(spark):
 
 
 def test_error_surfacing_skips_unreferenced_child(spark):
-    """With ignore_inconsistency=False every ref goes through the
-    cogroup kernel, including a modern child no slot references: it
-    yields no rows instead of failing the kernel."""
+    """With ignore_inconsistency=False a modern child that no slot
+    references takes no part in the keyed pass: it neither fails the
+    annotation nor yields rows, and the referenced child still fills
+    its slot."""
     from osm_spark.temporal.annotate import annotate_ways
 
     nodes = [

@@ -439,9 +439,24 @@ def test_annotate_ways_single_keyed_pass(spark):
     assert "InMemoryTableScan" not in plan
 
 
+def test_annotate_ways_error_surfacing_single_keyed_pass(spark):
+    """With ignore_inconsistency=False annotate_ways takes the same
+    keyed pass: no cogroup, one Python node, at most 6 hash shuffles."""
+    from osm_spark.temporal.annotate import annotate_ways
+    from tests.test_annotate_edgecases import mixed_fixture
+
+    wdf, ndf = mixed_fixture(spark)
+    plan = _final_plan(annotate_ways(wdf, ndf, ignore_inconsistency=False))
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert len(re.findall(_PY_NODE, plan)) == 1, plan
+    assert _operators(plan, "Exchange hashpartitioning") <= 6, plan
+
+
 def test_annotate_relations_runs_kernel_once(spark):
     """Members and updates come from one aggregate over the annotation
-    rows, so the cogroup kernel is planned once."""
+    rows, so the annotation kernel is planned once: the executed plan
+    has no cogroup and three grouped pandas nodes — the relation
+    kernel, the way kernel and the way reverse flags."""
     from pyspark.sql import functions as F
 
     from osm_spark.temporal.annotate import annotate_ways
@@ -458,8 +473,9 @@ def test_annotate_relations_runs_kernel_once(spark):
         )).alias("members"),
     )
     df = annotate_relations(rels, ndf, annotate_ways(wdf, ndf))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert _count(plan, "FlatMapCoGroupsInPandas") == 1, plan
+    plan = _final_plan(df)
+    assert _operators(plan, "FlatMapCoGroupsInPandas") == 0, plan
+    assert _operators(plan, "FlatMapGroupsInPandas") == 3, plan
 
 
 def test_tile_pyramid_shuffles_independent_of_levels(spark):

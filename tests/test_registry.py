@@ -117,3 +117,20 @@ def test_suite_imports_its_own_checkout(repo_root):
     root = os.path.realpath(repo_root) + os.sep
     for mod in (osm_spark, E):
         assert os.path.realpath(mod.__file__).startswith(root), mod.__file__
+
+
+def test_harness_rejects_unknown_query_names():
+    """A mistyped or deregistered query name fails the oracle harness
+    with the unknown names listed, before any Spark session starts,
+    instead of printing "0/0 queries match" and exiting 0."""
+    import subprocess
+
+    known = next(iter(E.queries()))
+    r = subprocess.run(
+        [sys.executable, os.path.join(SCRIPTS, "check_oracle.py"),
+         "/nonexistent-sf", known, "pip_wkb", "no_such_query"],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode != 0
+    assert "unknown queries: no_such_query pip_wkb" in r.stderr, r.stderr
+    assert "log4j" not in r.stderr and "queries match" not in r.stdout

@@ -18,19 +18,11 @@ def _direct_topk(tf, k):
 
 
 def _salted_topk(tf, k, salt=16):
-    w1 = Window.partitionBy("tile_x", "tile_y", "_salt").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    w2 = Window.partitionBy("tile_x", "tile_y").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    return (
-        tf.withColumn("_salt", F.pmod(F.xxhash64("term"), F.lit(salt)).cast("int"))
-        .withColumn("_lr", F.row_number().over(w1))
-        .where(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-        .withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
+    from osm_spark.plans.skew import salted_topk
+
+    return salted_topk(
+        tf, k, [F.col("n").desc(), F.col("term").asc()],
+        F.xxhash64("term"), salt, ["tile_x", "tile_y"],
     )
 
 
